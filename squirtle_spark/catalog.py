@@ -18,6 +18,13 @@ the parquet scan through the view.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import itertools
+import re
+import shutil
+from typing import Any, Callable, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -254,17 +261,122 @@ DERIVED_VIEWS: dict[str, callable] = {
 }
 
 
-# applicationId → sf_dir already registered (temp views are idempotent; skip
-# re-reading 10 parquet schemas on every query of a run). Keyed on the
-# applicationId, not id(session): CPython can reuse an id() after a stopped
-# session is collected, which would silently skip registration on the new one.
-_REGISTERED: dict[str, str] = {}
+# ---------------------------------------------------------------------------
+# Session store: every session-lifetime materialization in one cache
+# ---------------------------------------------------------------------------
+
+
+class Entry(NamedTuple):
+    """One cached session materialization (bounded iff it owns views)."""
+
+    value: Any
+    #: session temp views the entry owns, and the materialized frames
+    #: behind them (unpersisted on release, never on eviction)
+    views: tuple[str, ...] = ()
+    frames: tuple[DataFrame, ...] = ()
+    #: further clean-up (a temp dir, deferred checkpoint files), called
+    #: with ``value`` when the entry is explicitly released
+    release: Callable[[Any], None] | None = None
+
+
+#: (sessionUUID, kind, *args) → Entry. Keyed on the JVM session's UUID:
+#: temp views are session-scoped, spark.newSession() shares the
+#: applicationId, and CPython can reuse an id() after a stopped session
+#: is collected — neither may ever serve one session another's entries.
+#: Kinds: "registered" (sf_dir of the temp views), "matview", "pq_index",
+#: "brute_q", "decon_guard", "cdc_mor" and "ckpt_deletes".
+_STORE: dict[tuple, Entry] = {}
+#: Bound on live view-owning entries (matviews + PQ indexes): a long-
+#: lived session sweeping many sf_dirs would otherwise grow the cache
+#: (and its materialized blocks) without limit. FIFO eviction — a
+#: rebuild is the documented cost, staleness is not.
+_ENTRY_MAX = 32
+#: Monotonic view-name sequence: a count of live entries would REUSE a
+#: name after an eviction and silently overwrite a live entry's view.
+_VIEW_SEQ = itertools.count()
+
+
+def _sid(spark: SparkSession) -> str:
+    # cached on the Python handle: a hit stays a dict lookup, no py4j call
+    sid = getattr(spark, "_squirtle_sid", None)
+    if sid is None:
+        sid = spark._squirtle_sid = spark._jsparkSession.sessionUUID()
+    return sid
+
+
+def entry(spark: SparkSession, *key) -> Entry | None:
+    """This session's entry under ``key``, or None."""
+    return _STORE.get((_sid(spark), *key))
+
+
+def store(spark: SparkSession, key: tuple, value, views=(), frames=()) -> None:
+    """Cache ``value`` for this session, owning ``views`` and ``frames``."""
+    _STORE[(_sid(spark), *key)] = Entry(value, tuple(views), tuple(frames))
+
+
+def memo(spark: SparkSession, key: tuple, build, release=None):
+    """``build()``'s value, run once per session and ``key``."""
+    k = (_sid(spark), *key)
+    if k not in _STORE:
+        _STORE[k] = Entry(build(), release=release)
+    return _STORE[k].value
+
+
+def view_prefix(stem: str) -> str:
+    """A session-unique temp-view name prefix ``{stem}{n}``."""
+    return f"{stem}{next(_VIEW_SEQ)}"
+
+
+def make_room(spark: SparkSession, reads: str = "") -> None:
+    """FIFO-evict view-owning entries until one more fits _ENTRY_MAX."""
+    sid = _sid(spark)
+    bounded = [k for k, e in _STORE.items() if e.views]
+    # never evict a view the in-flight build (SQL ``reads``) names
+    # (ADVICE r9: a staged pipeline holds earlier stages' views by name;
+    # evicting one mid-chain fails the build with TABLE_OR_VIEW_NOT_FOUND).
+    # View names carry a unique sequence token, so a substring match
+    # cannot false-positive.
+    evictable = [
+        k for k in bounded if not any(v in reads for v in _STORE[k].views)
+    ]
+    while len(bounded) >= _ENTRY_MAX and evictable:
+        # prefer THIS session's oldest entry: its views can actually be
+        # dropped here; a foreign session's views live until that
+        # session ends, so evicting its key only discards the handle
+        key = next((k for k in evictable if k[0] == sid), evictable[0])
+        evictable.remove(key)
+        bounded.remove(key)
+        e = _STORE.pop(key)
+        if key[0] == sid:
+            # drop the handle ONLY — no unpersist: an outstanding
+            # consumer analyzed against this (lineage-truncated) relation
+            # must keep working; blocks reclaim via RDD GC
+            for v in e.views:
+                spark.catalog.dropTempView(v)
+        for df in e.frames:
+            _defer_checkpoint_delete(spark, df, key[0])
+
+
+def _release(spark: SparkSession, kinds=None) -> None:
+    """Explicitly release this session's entries (of ``kinds``, or all):
+    drop their views, unpersist their frames, run their release action."""
+    sid = _sid(spark)
+    for key in [
+        k for k in _STORE if k[0] == sid and (kinds is None or k[1] in kinds)
+    ]:
+        e = _STORE.pop(key)
+        for v in e.views:
+            spark.catalog.dropTempView(v)
+        for df in e.frames:
+            _unpersist_matview(df)
+        if e.release is not None:
+            e.release(e.value)
 
 
 def register_all(spark: SparkSession, sf_dir: str, force: bool = False) -> None:
-    """Register every fixture table + derived view as a temp view."""
-    key = spark.sparkContext.applicationId
-    if not force and _REGISTERED.get(key) == sf_dir:
+    """Register every fixture table + derived view as a temp view (once
+    per session and sf_dir: no re-reading 10 parquet schemas per query)."""
+    if not force and getattr(entry(spark, "registered"), "value", None) == sf_dir:
         return
     configure(spark)
     for t in TABLES:
@@ -281,19 +393,7 @@ def register_all(spark: SparkSession, sf_dir: str, force: bool = False) -> None:
                 "__S_SPREAD__", str(s_cnt // 4 + 1)
             )
         spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {name} AS {body}")
-    _REGISTERED[key] = sf_dir
-
-
-#: Callbacks run by invalidate() so sibling caches keyed on session state
-#: (the PQ index in operators/similarity.py) drop with the catalog instead
-#: of serving stale materializations — registered at import time by the
-#: owning module (no circular import).
-_INVALIDATION_HOOKS: list = []
-
-
-def register_invalidation_hook(fn) -> None:
-    """Register ``fn(spark)`` to run whenever invalidate() is called."""
-    _INVALIDATION_HOOKS.append(fn)
+    store(spark, ("registered",), sf_dir)
 
 
 def forget_registration(spark: SparkSession) -> None:
@@ -305,41 +405,19 @@ def forget_registration(spark: SparkSession) -> None:
     catalog under their own unique view names, so a name clobber cannot
     have poisoned them, and dropping them here would force pointless
     shingle/minhash/PQ rebuilds on the next query (review r10)."""
-    _REGISTERED.pop(spark.sparkContext.applicationId, None)
+    _STORE.pop((_sid(spark), "registered"), None)
 
 
 def invalidate(spark: SparkSession) -> None:
-    """Full DATA-level invalidation: forget the registration AND drop this
-    session's materialized relations (and, via hooks, the PQ index) —
-    call after the parquet contents under a registered sf_dir are
-    rewritten (session_matview assumes fixed fixture data; see its
-    docstring). A matview checkpointed from the old data would otherwise
-    keep serving stale rows forever, since its key — (appId, id(spark),
-    sf_dir, name) — is unchanged by a same-dir rewrite (ADVICE r9).
-    Outstanding DataFrames analyzed against a dropped matview fail
-    fast on their next action instead of reading stale data — the
-    caller has declared that data invalid. For a mere view-name clobber
-    use forget_registration()."""
-    forget_registration(spark)
-    clear_matviews(spark)
-    for fn in _INVALIDATION_HOOKS:
-        fn(spark)
+    """Full DATA-level invalidation: release every store entry of this
+    session (other sessions' stay) — call after the parquet under a
+    registered sf_dir is rewritten, since a same-dir rewrite leaves
+    every key unchanged and old entries would serve stale rows forever
+    (ADVICE r9). Outstanding DataFrames analyzed against a dropped
+    matview fail fast on their next action instead of reading stale
+    data. For a mere view-name clobber use forget_registration()."""
+    _release(spark)
 
-
-#: Session-materialized relation cache: (application, session, sf_dir,
-#: name) → (temp-view name, materialized DataFrame) over an eagerly-
-#: materialized build. Spark INLINES multi-referenced CTEs, so any query
-#: whose SQL references an expensive derived relation k times executes it
-#: k times; registered entries route such relations through here so the
-#: relation builds ONCE per (session, table) and later references scan
-#: the materialized rows (the PQ-index train/encode/search lifecycle,
-#: generalized). FIFO-bounded; unique view names per build so a session
-#: switching sf_dirs can never read a stale relation. The DuckDB oracles
-#: keep their self-contained CTE text — DuckDB materializes multi-
-#: referenced CTEs itself, so both engines run the same work shape.
-_MATVIEWS: dict[tuple, tuple[str, DataFrame]] = {}
-_MATVIEW_MAX = 24
-_MATVIEW_SEQ = 0
 
 #: HOW a matview (and the PQ index, which routes through materialize())
 #: is pinned. ``local`` — eager localCheckpoint: fastest, but lineage is
@@ -408,9 +486,9 @@ def materialize(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Eagerly materialize ``df`` under the configured reliability mode.
 
     Single choke point for every session-lifetime materialization (the
-    matview cache below and the PQ index in operators/similarity.py), so
-    the local-vs-cluster reliability decision is one knob, not N call
-    sites."""
+    session store's matviews and PQ indexes), so the local-vs-cluster
+    reliability decision is one knob, not N call sites. The caller owns
+    the result's release: store it as an Entry frame."""
     mode = matview_mode()
     if mode == "local":
         return df.localCheckpoint(eager=True)
@@ -439,19 +517,6 @@ def materialize(spark: SparkSession, df: DataFrame) -> DataFrame:
     return out
 
 
-#: Checkpoint paths of reliable-mode materializations dropped by silent
-#: cache EVICTION, keyed by owning-session id. Eviction must not delete
-#: the files immediately (reliable-mode consumers READ them — the same
-#: live-consumer rule that forbids unpersist on eviction), but nothing
-#: else ever cleans them (cleanCheckpoints defaults false), so a
-#: long-lived reliable session with eviction churn past _MATVIEW_MAX
-#: would grow its checkpoint dir without bound (ADVICE r10). The paths
-#: are deleted at the next explicit clear_matviews()/invalidate() — the
-#: caller declaring this session's materializations dead — or, local
-#: paths only, best-effort at interpreter exit.
-_DEFERRED_CKPT_DELETES: dict[int, list[str]] = {}
-
-
 def _checkpoint_path(df: DataFrame) -> str | None:
     """The reliable-checkpoint file path behind ``df``, or None (local
     checkpoints and persist-mode frames have no file)."""
@@ -462,108 +527,83 @@ def _checkpoint_path(df: DataFrame) -> str | None:
         return None
 
 
-def defer_checkpoint_delete(df: DataFrame, owner_session_id: int) -> None:
-    """Record an EVICTED materialization's reliable-checkpoint files for
-    deferred deletion (used by the matview FIFO below and the PQ-index
-    eviction in operators/similarity.py)."""
-    p = _checkpoint_path(df)
-    if p:
-        _DEFERRED_CKPT_DELETES.setdefault(owner_session_id, []).append(p)
-
-
-def _delete_ckpt_files(spark: SparkSession, path: str) -> None:
+def _delete_ckpt_files(spark: SparkSession, paths) -> None:
     """Best-effort recursive delete via the Hadoop FS (works for file:,
     hdfs:, s3a: — whatever the checkpoint dir was configured on)."""
-    try:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
-    except Exception:
-        pass
+    for path in paths:
+        try:
+            jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+            jpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(
+                jpath, True
+            )
+        except Exception:
+            pass
 
 
-def _drain_deferred_ckpt_deletes(spark: SparkSession) -> None:
-    for p in _DEFERRED_CKPT_DELETES.pop(id(spark), []):
-        _delete_ckpt_files(spark, p)
+def _defer_checkpoint_delete(
+    spark: SparkSession, df: DataFrame, owner_sid: str
+) -> None:
+    """Queue an EVICTED frame's reliable-checkpoint files on its owner
+    session's "ckpt_deletes" entry. Eviction can't delete them (consumers
+    READ them) and nothing else ever does (cleanCheckpoints defaults
+    false), so a reliable session with eviction churn would grow its
+    checkpoint dir without bound (ADVICE r10); the owner's next
+    clear_matviews()/invalidate() — or interpreter exit — deletes them."""
+    p = _checkpoint_path(df)
+    if p:
+        _STORE.setdefault(
+            (owner_sid, "ckpt_deletes"),
+            Entry([], release=functools.partial(_delete_ckpt_files, spark)),
+        ).value.append(p)
 
 
 def _cleanup_deferred_at_exit() -> None:
     # the JVM may already be gone at interpreter exit: clean what we can
     # reach OS-side (local file: paths); remote schemes stay for the
     # cluster's checkpoint-dir retention policy
-    import re
-    import shutil
-
-    for paths in _DEFERRED_CKPT_DELETES.values():
-        for p in paths:
+    for key in [k for k in _STORE if k[1] == "ckpt_deletes"]:
+        for p in _STORE.pop(key).value:
             if "://" in p and not p.startswith("file:"):
                 continue
-            local = re.sub(r"^file:/*", "/", p)
-            shutil.rmtree(local, ignore_errors=True)
-    _DEFERRED_CKPT_DELETES.clear()
+            shutil.rmtree(re.sub(r"^file:/*", "/", p), ignore_errors=True)
 
-
-import atexit  # noqa: E402
 
 atexit.register(_cleanup_deferred_at_exit)
 
 
 def _unpersist_matview(df: DataFrame) -> None:
-    """Best-effort release of a matview's blocks — ONLY on explicit
-    invalidation (invalidate()/clear_matviews), never on silent cache
-    eviction: a localCheckpoint frame cannot be recomputed (lineage
-    truncated), so destroying its blocks while an already-analyzed
-    consumer DataFrame is still outstanding turns that consumer's next
-    action into a 'checkpoint block not found' crash. Eviction therefore
-    drops only the view handle and lets RDD GC reclaim blocks; explicit
-    invalidation is the caller declaring the DATA invalid, where
-    fail-fast on stale consumers is the correct outcome (review r10).
-
-    persist-mode frames release through the CacheManager; checkpointed
-    frames hold RDD-level blocks the CacheManager doesn't know, reachable
-    through the analyzed LogicalRDD; reliable-mode frames additionally
-    delete their checkpoint FILES (nothing else ever cleans those —
-    spark.cleaner...cleanCheckpoints defaults false, so a long-lived
-    reliable session would otherwise grow its checkpoint dir without
-    bound). Failures are swallowed — a lingering block/file is a bounded
-    space leak, not a correctness issue."""
+    """Best-effort release of a materialized frame's blocks (and, in
+    reliable mode, its checkpoint FILES, which nothing else ever cleans)
+    — ONLY on explicit release, never on silent eviction: a
+    localCheckpoint frame cannot be recomputed (lineage truncated), so
+    destroying its blocks under an already-analyzed consumer turns that
+    consumer's next action into a 'checkpoint block not found' crash;
+    after an explicit invalidation that fail-fast is the right outcome
+    (review r10). Checkpointed frames hold RDD-level blocks the
+    CacheManager doesn't know, reachable through the analyzed
+    LogicalRDD. Failures are swallowed: a lingering block/file is a
+    bounded space leak, not a correctness issue."""
     try:
         df.unpersist()
-        rdd = df._jdf.queryExecution().analyzed().rdd()
-        ckpt = rdd.getCheckpointFile()
-        rdd.unpersist(False)
-        if ckpt.isDefined():  # reliable mode: remove the checkpoint files
-            jvm = df.sparkSession._jvm
-            path = jvm.org.apache.hadoop.fs.Path(ckpt.get())
-            fs = path.getFileSystem(
-                df.sparkSession._jsc.hadoopConfiguration()
-            )
-            fs.delete(path, True)
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
         pass
+    p = _checkpoint_path(df)
+    if p:  # reliable mode: remove the checkpoint files
+        _delete_ckpt_files(df.sparkSession, [p])
 
 
 def clear_matviews(spark: SparkSession) -> None:
-    """Drop + unpersist every materialized relation THIS session owns.
+    """Drop + unpersist every matview THIS session owns, and delete the
+    checkpoint files its evicted reliable-mode entries deferred.
 
     Foreign sessions' entries are left alone (their temp views can only
-    be dropped by their own session). Used by invalidate() and available
-    to hosts that want the block manager clean before a memory-sensitive
-    phase. (Measured r10: matview blocks do NOT slow the streaming bench
-    lanes — an aged session ran q5 ~25% FASTER than a fresh one because
-    JIT warm depth dominates — so bench.py deliberately does not call
-    this.)"""
-    for key in [k for k in _MATVIEWS if k[1] == id(spark)]:
-        view, df = _MATVIEWS.pop(key)
-        try:
-            spark.catalog.dropTempView(view)
-        except Exception:
-            pass
-        _unpersist_matview(df)
-    # evicted reliable-mode entries deferred their checkpoint-file
-    # deletion to exactly this moment (see _DEFERRED_CKPT_DELETES)
-    _drain_deferred_ckpt_deletes(spark)
+    be dropped by their own session). Available to hosts that want the
+    block manager clean before a memory-sensitive phase. (Measured r10:
+    matview blocks do NOT slow the streaming bench lanes — an aged
+    session ran q5 ~25% FASTER than a fresh one because JIT warm depth
+    dominates — so bench.py deliberately does not call this.)"""
+    _release(spark, kinds=("matview", "ckpt_deletes"))
 
 
 def session_matview(
@@ -574,7 +614,12 @@ def session_matview(
     distribute_by: str | None = None,
 ) -> str:
     """Temp-view name for the materialized ``build_sql`` relation,
-    building it on first use per (session, sf_dir, ``name``).
+    building it on first use per (session, sf_dir, ``name``) — store kind
+    "matview". Spark INLINES multi-referenced CTEs, so a query naming an
+    expensive derived relation k times executes it k times; routed
+    through here it builds ONCE per session and later references scan
+    the materialized rows. The DuckDB oracles keep their self-contained
+    CTE text — DuckDB materializes multi-referenced CTEs itself.
 
     ``name`` must be unique per relation DEFINITION — callers own the
     namespace. The build always runs against the canonical catalog
@@ -621,42 +666,14 @@ def session_matview(
     ASSUMES FIXED FIXTURE DATA under ``sf_dir`` for the session's
     lifetime: the cache key cannot see a same-path parquet rewrite. A
     host that rewrites data in place must call invalidate(), which
-    drops this session's matviews (and the PQ index)."""
-    global _MATVIEW_SEQ
-    key = (spark.sparkContext.applicationId, id(spark), sf_dir, name)
-    if key in _MATVIEWS:
-        return _MATVIEWS[key][0]
+    releases every store entry of this session."""
+    key = ("matview", sf_dir, name)
+    hit = entry(spark, *key)
+    if hit is not None:
+        return hit.value
     register_all(spark, sf_dir, force=True)
-    evictable = [
-        k
-        for k, (v, _) in _MATVIEWS.items()
-        # never evict a view the in-flight build reads (ADVICE r9: a
-        # staged pipeline holds earlier stages' views by name in
-        # build_sql; evicting one mid-chain fails the build with
-        # TABLE_OR_VIEW_NOT_FOUND). View names are mv{seq}_{name} —
-        # unique tokens, substring match cannot false-positive.
-        if v not in build_sql
-    ]
-    while len(_MATVIEWS) >= _MATVIEW_MAX and evictable:
-        # prefer evicting THIS session's oldest entry: its view can
-        # actually be dropped here; a foreign session's views live until
-        # that session ends, so evicting its key only drops the handle
-        old_key = next(
-            (k for k in evictable if k[1] == id(spark)), evictable[0]
-        )
-        evictable.remove(old_key)
-        old_view, old_df = _MATVIEWS.pop(old_key)
-        if old_key[1] == id(spark):
-            # drop the handle ONLY — no unpersist: an outstanding consumer
-            # analyzed against this (lineage-truncated) relation must keep
-            # working; blocks reclaim via RDD GC (see _unpersist_matview)
-            spark.catalog.dropTempView(old_view)
-        # reliable mode: the entry's checkpoint FILES can't be deleted
-        # now (consumers read them) and RDD GC never deletes them —
-        # queue them for the next explicit clear/invalidate
-        defer_checkpoint_delete(old_df, old_key[1])
-    view = f"mv{_MATVIEW_SEQ}_{name}"
-    _MATVIEW_SEQ += 1
+    make_room(spark, reads=build_sql)
+    view = f"{view_prefix('mv')}_{name}"
     if distribute_by is None:
         mat = materialize(spark, spark.sql(build_sql))
     else:
@@ -668,7 +685,7 @@ def session_matview(
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", aqe)
     mat.createOrReplaceTempView(view)
-    _MATVIEWS[key] = (view, mat)
+    store(spark, key, view, views=(view,), frames=(mat,))
     return view
 
 

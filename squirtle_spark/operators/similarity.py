@@ -26,6 +26,7 @@ deterministically; ties then break on candidate id.
 from __future__ import annotations
 
 import random
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -112,10 +113,10 @@ def _emb_view(spark, sf_dir) -> str:
 # (see unrolled_fold). The scale-correct form hands whole candidate
 # batches to NumPy: one (batch x queries) matmul per Arrow batch replaces
 # |batch|·|queries| interpreted 64-term folds. The query block is bounded
-# (|queries| = N_QUERIES = 10) and cached per (app, session, sf_dir) like
-# _PQ_QUERIES — the same driver-side probe-routing lifecycle r14
-# sanctioned for the IVF index (nothing persists across sessions; the
-# catalog invalidation hook clears it).
+# (|queries| = N_QUERIES = 10) and cached per (session, sf_dir) in the
+# catalog's session store (kind "brute_q") — the same driver-side
+# probe-routing lifecycle r14 sanctioned for the IVF index (nothing
+# persists across sessions; catalog.invalidate releases it).
 #
 # Value contract: the kernel emits the RAW double cosine (dot / (qn·cn));
 # the JVM applies the SAME ``F.round(·, 4)`` the expression form used, so
@@ -127,30 +128,16 @@ def _emb_view(spark, sf_dir) -> str:
 # propagation).
 # ---------------------------------------------------------------------------
 
-_BRUTE_Q: dict[tuple, tuple] = {}
-
-
-def _invalidate_brute_queries(spark) -> None:
-    """catalog.invalidate() hook: drop this session's cached query block
-    (same reason as _invalidate_pq_index — a same-path parquet rewrite
-    leaves the cache key unchanged)."""
-    for key in [k for k in _BRUTE_Q if k[1] == id(spark)]:
-        _BRUTE_Q.pop(key)
-
-
-_catalog.register_invalidation_hook(_invalidate_brute_queries)
-
-
 def _brute_query_block(spark, sf_dir):
     """(q_ids int64[Q], Q float64[Q,dim], qn float64[Q]) of the bounded
-    query set (vec_id < N_QUERIES), collected once per (app, session,
-    sf_dir) off the embedding matview; None if any query row is NULL or
-    ragged (callers then fall back to the expression kernel, whose
-    zip_with NULL propagation defines the semantics for that case)."""
+    query set (vec_id < N_QUERIES), collected once per (session, sf_dir)
+    off the embedding matview and held in the catalog's session store;
+    None if any query row is NULL or ragged (callers then fall back to
+    the expression kernel, whose zip_with NULL propagation defines the
+    semantics for that case)."""
     import numpy as np
 
-    key = (spark.sparkContext.applicationId, id(spark), sf_dir)
-    if key not in _BRUTE_Q:
+    def build():
         rows = (
             spark.table(_emb_view(spark, sf_dir))
             .where(F.col("vec_id") < N_QUERIES)
@@ -159,14 +146,14 @@ def _brute_query_block(spark, sf_dir):
         )
         rows.sort(key=lambda r: r[0])
         if any(r[1] is None or len(r[1]) != EMB_DIM or r[2] is None for r in rows):
-            _BRUTE_Q[key] = None
-        else:
-            _BRUTE_Q[key] = (
-                np.array([r[0] for r in rows], dtype=np.int64),
-                np.array([r[1] for r in rows], dtype=np.float64),
-                np.array([r[2] for r in rows], dtype=np.float64),
-            )
-    return _BRUTE_Q[key]
+            return None
+        return (
+            np.array([r[0] for r in rows], dtype=np.int64),
+            np.array([r[1] for r in rows], dtype=np.float64),
+            np.array([r[2] for r in rows], dtype=np.float64),
+        )
+
+    return _catalog.memo(spark, ("brute_q", sf_dir), build)
 
 
 def _brute_pair_scores_arrow(
@@ -1133,7 +1120,7 @@ def _ann_pq(
 
     Spark runs three stages mirroring a real vector store's lifecycle —
     train (codebook, bounded collect), encode (code table, materialized
-    once per (session, table) by ``_pq_index_views``), search (LUT + ADC
+    once per (session, table) by ``_pq_index``), search (LUT + ADC
     against the materialized codes) — returning one SQL string per
     stage; ``views`` names the (codebook, codes, centroids) temp views
     the stages hand results through. DuckDB replays the whole lifecycle
@@ -1396,7 +1383,7 @@ WHERE rank <= {TOP_K}
 
     def query(prefix: str, cb_src: str) -> str:
         # Spark reads the materialized codes view (built once by
-        # _pq_index_views); DuckDB derives codes inline in one statement
+        # _pq_index); DuckDB derives codes inline in one statement
         codes_cte = (
             ""
             if d == dl.SPARK
@@ -1447,35 +1434,21 @@ SELECT c_id, m, code FROM codes0"""
     return query(train, "cb")
 
 
-#: (applicationId, sf_dir, ivf) -> (cb_view, codes_view, cents_view):
-#: the PQ index — codebook, encoded code table, coarse centroids — is
-#: built ONCE per session and table and reused by later searches, the
-#: lifecycle every vector store runs (FAISS train/add vs search; a
-#: cluster deployment persists the code table as parquet partitioned by
-#: cell and rebuilds on data change). Unique per-key view names keep a
-#: session that switches sf_dirs from reading a stale index.
-_PQ_INDEX: dict[tuple, tuple[str, str, str]] = {}
-#: Bound on live cached indexes (VERDICT r6 item 8): a long-lived API
-#: session sweeping many sf_dirs would otherwise grow the cache (and its
-#: localCheckpointed code tables) without limit. FIFO eviction — index
-#: rebuild is the documented bounded-training cost, staleness is not.
-_PQ_INDEX_MAX = 8
-#: Monotonic view-name counter: len(_PQ_INDEX) would REUSE a prefix
-#: after an eviction and silently overwrite a live entry's views.
-_PQ_SEQ = 0
-#: key -> the materialized code-table DataFrame, held so eviction /
-#: invalidation can release its blocks (not just drop the view handle).
-_PQ_CODES: dict[tuple, "DataFrame"] = {}
-#: key -> [(cell, cw, cn2)] coarse centroids / [(vec_id, w)] quantized
-#: query vectors, kept driver-side for coordinator probe routing
-#: (_route_probes). Both are index-training-bounded: N_CELLS centroid
-#: rows, N_QUERIES query rows — the same class of bounded collect the
-#: cents view build already does.
-_PQ_CENTS: dict[tuple, list] = {}
-_PQ_QUERIES: dict[tuple, list] = {}
+class _PQIndex(NamedTuple):
+    """The PQ index of one (session, table, ivf, n_cells), store kind
+    "pq_index": built ONCE, reused by later searches — the lifecycle
+    every vector store runs (FAISS train/add vs search)."""
+
+    #: (codebook, encoded code table, coarse centroids) temp views
+    views: tuple[str, str, str]
+    #: IVF only, driver-side for coordinator probe routing: [(cell, cw,
+    #: cn2)] coarse centroids and [(vec_id, w)] quantized query vectors —
+    #: index-training-bounded (N_CELLS and N_QUERIES rows)
+    cents: list
+    queries: list
 
 
-def _route_probes(key: tuple, npb: int) -> list[tuple[int, int]]:
+def _route_probes(index: _PQIndex, npb: int) -> list[tuple[int, int]]:
     """Coordinator-side IVF probe routing: for each cached query vector,
     the ``npb`` squared-L2-nearest coarse cells, as (q_id, cell) rows.
 
@@ -1494,84 +1467,45 @@ def _route_probes(key: tuple, npb: int) -> list[tuple[int, int]]:
     form stays available (probes_rows=None) for a query batch too large
     to route at the coordinator."""
     out: list[tuple[int, int]] = []
-    for q_id, w in _PQ_QUERIES[key]:
+    for q_id, w in index.queries:
         rel = sorted(
             (cn2 - 2 * sum(a * b for a, b in zip(w, cw)), cell)
-            for cell, cw, cn2 in _PQ_CENTS[key]
+            for cell, cw, cn2 in index.cents
         )
         out.extend((q_id, cell) for _, cell in rel[:npb])
     return out
 
 
-def _invalidate_pq_index(spark) -> None:
-    """catalog.invalidate() hook: drop THIS session's cached PQ indexes.
-
-    A same-path parquet rewrite leaves the (appId, session, sf_dir)
-    cache key unchanged, so without this an invalidated session keeps
-    searching a stale code table (ADVICE r9)."""
-    for key in [k for k in _PQ_INDEX if k[1] == id(spark)]:
-        views = _PQ_INDEX.pop(key)
-        codes = _PQ_CODES.pop(key, None)
-        _PQ_CENTS.pop(key, None)
-        _PQ_QUERIES.pop(key, None)
-        for v in views:
-            try:
-                spark.catalog.dropTempView(v)
-            except Exception:
-                pass
-        if codes is not None:
-            _catalog._unpersist_matview(codes)
-
-
-_catalog.register_invalidation_hook(_invalidate_pq_index)
-
-
-def _pq_key(spark, sf_dir: str, ivf: bool, nc: int) -> tuple:
-    return (spark.sparkContext.applicationId, id(spark), sf_dir, bool(ivf), nc)
-
-
-def _pq_index_views(
+def _pq_index(
     spark,
     sf_dir: str,
     ivf: bool,
     n_cells: int | None = None,
     n_probe: int | None = None,
-) -> tuple[str, str, str]:
-    # keyed by the SESSION (id(spark)), not just applicationId: temp views
-    # are session-scoped, and spark.newSession() shares the applicationId
-    # while holding an empty catalog — an app-keyed cache would hand it
-    # view names that don't resolve there
-    nc = N_CELLS if n_cells is None else n_cells
-    key = _pq_key(spark, sf_dir, ivf, nc)
-    if key in _PQ_INDEX:
-        return _PQ_INDEX[key]
-    global _PQ_SEQ
-    while len(_PQ_INDEX) >= _PQ_INDEX_MAX:
-        # Prefer evicting THIS session's oldest entry: its views (and
-        # checkpointed code table) can actually be dropped here. Evicting
-        # a foreign session's entry only discards the tracking handle —
-        # that session's views live until it ends — so it's the fallback.
-        old_key = next(
-            (k for k in _PQ_INDEX if k[1] == id(spark)), next(iter(_PQ_INDEX))
-        )
-        old_views = _PQ_INDEX.pop(old_key)
-        old_codes = _PQ_CODES.pop(old_key, None)
-        _PQ_CENTS.pop(old_key, None)
-        _PQ_QUERIES.pop(old_key, None)
-        if old_codes is not None:
-            # reliable-mode code tables leave checkpoint FILES behind;
-            # eviction can't delete them (live consumers) — defer to the
-            # owner session's next clear_matviews/invalidate (ADVICE r10)
-            _catalog.defer_checkpoint_delete(old_codes, old_key[1])
-        if old_key[1] == id(spark):  # views are session-scoped
-            # handles only — no unpersist on silent eviction (an
-            # outstanding consumer of the lineage-truncated code table
-            # must keep working; see catalog._unpersist_matview)
-            for v in old_views:
-                spark.catalog.dropTempView(v)
-    prefix = f"{'ivfpq' if ivf else 'pq'}_{_PQ_SEQ}"
-    _PQ_SEQ += 1
+) -> _PQIndex:
+    """This session's PQ index over ``sf_dir``, built on first use and
+    bounded, evicted and released by the session store like a matview
+    (so catalog.invalidate drops it on a same-path rewrite, ADVICE r9).
+    Unique per-build view names keep a session that switches sf_dirs
+    from reading a stale index."""
+    key = ("pq_index", sf_dir, bool(ivf), N_CELLS if n_cells is None else n_cells)
+    hit = _catalog.entry(spark, *key)
+    if hit is not None:
+        return hit.value
+    nc = key[-1]
+    _catalog.make_room(spark)
+    prefix = _catalog.view_prefix("ivfpq_" if ivf else "pq_")
     views = (f"{prefix}_cb", f"{prefix}_codes", f"{prefix}_cents")
+    frames = []
+
+    def pin(df, view: str) -> None:
+        # materialize under the session-wide reliability knob and hold
+        # the frame so releasing the entry can free its blocks
+        frames.append(_catalog.materialize(spark, df))
+        frames[-1].createOrReplaceTempView(view)
+
+    cent_rows: list = []
+    queries: list = []
     if ivf:
         # IVF_OFF's packed-argmin positivity needs |component| <= ~1.8
         # (|rel| <= 1.92e10 * m^2 must stay under 2^36); embeddings past
@@ -1602,16 +1536,15 @@ def _pq_index_views(
         # lineage, so EVERY search re-runs the Python->JVM row conversion
         # (a Python worker round-trip per action — r15 probe); checkpointing
         # pins the 16 rows as JVM blocks once at index build
-        _catalog.materialize(
-            spark,
+        pin(
             spark.createDataFrame(cent_rows, "cell int, cw array<bigint>, cn2 bigint"),
-        ).createOrReplaceTempView(views[2])
+            views[2],
+        )
         # keep centroids + quantized queries driver-side for coordinator
         # probe routing (_route_probes); the query vectors are quantized
         # by the SAME SQL expression the index/oracle use, so routing
         # arithmetic can never diverge on a rounding rule
-        _PQ_CENTS[key] = cent_rows
-        _PQ_QUERIES[key] = [
+        queries = [
             (r["vec_id"], list(r["w"]))
             for r in spark.sql(
                 f"SELECT vec_id, transform(CAST(embedding AS ARRAY<DOUBLE>), "
@@ -1627,32 +1560,31 @@ def _pq_index_views(
     # into the encode and LUT stages. Materialized (JVM blocks): without
     # it the view scans applySchemaToPythonRDD lineage and every search
     # pays a Python worker round-trip to re-deserialize the codebook.
-    _catalog.materialize(
-        spark, spark.createDataFrame(cb.collect(), cb.schema)
-    ).createOrReplaceTempView(views[0])
+    pin(spark.createDataFrame(cb.collect(), cb.schema), views[0])
     # materialize the (cell-tagged) code table — the index-persist step;
     # keeps the encode argmin out of search plans. Pinning strategy is
     # the session-wide matview knob (catalog.materialize): local
     # checkpoint on local[*]; reliable checkpoint / replicated persist on
     # a cluster, where one lost executor must not strand the index.
-    codes = _catalog.materialize(spark, spark.sql(encode_sql))
-    codes.createOrReplaceTempView(views[1])
-    _PQ_INDEX[key] = views
-    _PQ_CODES[key] = codes
-    return views
+    pin(spark.sql(encode_sql), views[1])
+    index = _PQIndex(views, cent_rows, queries)
+    _catalog.store(spark, key, index, views=views, frames=frames)
+    return index
 
 
 def _ann_pq_spark(spark, sf_dir) -> DataFrame:
-    views = _pq_index_views(spark, sf_dir, ivf=False)
-    _, _, query_sql = _ann_pq(dl.SPARK, views=views)
+    index = _pq_index(spark, sf_dir, ivf=False)
+    _, _, query_sql = _ann_pq(dl.SPARK, views=index.views)
     return spark.sql(query_sql)
 
 
 def _ann_ivfpq_spark(spark, sf_dir) -> DataFrame:
-    views = _pq_index_views(spark, sf_dir, ivf=True)
-    probes = _route_probes(_pq_key(spark, sf_dir, True, N_CELLS), N_PROBE)
+    index = _pq_index(spark, sf_dir, ivf=True)
     _, _, query_sql = _ann_pq(
-        dl.SPARK, ivf=True, views=views, probes_rows=probes
+        dl.SPARK,
+        ivf=True,
+        views=index.views,
+        probes_rows=_route_probes(index, N_PROBE),
     )
     return spark.sql(query_sql)
 
@@ -1680,17 +1612,10 @@ def index_content_fingerprint(spark, sf_dir: str) -> str:
 
     parts: list[str] = []
     for ivf in (False, True):
-        key = (
-            spark.sparkContext.applicationId,
-            id(spark),
-            sf_dir,
-            ivf,
-            N_CELLS,
-        )
-        views = _PQ_INDEX.get(key)
-        if not views:
+        built = _catalog.entry(spark, "pq_index", sf_dir, ivf, N_CELLS)
+        if built is None:
             continue
-        for role, v in zip(("cb", "codes", "cents"), views):
+        for role, v in zip(("cb", "codes", "cents"), built.views):
             if not ivf and role == "cents":
                 continue  # plain PQ registers no centroid view
             r = spark.sql(
@@ -1716,17 +1641,14 @@ def ann_ivfpq_topk_at(
     # resolve the view and a session registered to a different dir would
     # silently index the wrong table (round-7 review finding).
     catalog.register_all(spark, sf_dir)
-    views = _pq_index_views(
-        spark, sf_dir, ivf=True, n_cells=n_cells, n_probe=n_probe
-    )
-    probes = _route_probes(_pq_key(spark, sf_dir, True, n_cells), n_probe)
+    index = _pq_index(spark, sf_dir, ivf=True, n_cells=n_cells, n_probe=n_probe)
     _, _, query_sql = _ann_pq(
         dl.SPARK,
         ivf=True,
-        views=views,
+        views=index.views,
         n_cells=n_cells,
         n_probe=n_probe,
-        probes_rows=probes,
+        probes_rows=_route_probes(index, n_probe),
     )
     return spark.sql(query_sql)
 
@@ -2056,31 +1978,6 @@ packed AS (
 """)
 
 
-#: (applicationId, sf_dir) pairs whose eval-id bound has been verified
-#: this session — the guard asserts a DATASET invariant (max id fits the
-#: 32-bit pack slot), so once per (session, dataset) is exactly as sound
-#: as per-call, and the per-call form billed one extra Spark job (~0.25 s
-#: driver-side action) to EVERY decon invocation inside the bench's
-#: timed region (r15 probe; guide §5 — no driver actions in query paths).
-#: Not a result cache: nothing about the query's OUTPUT is memoized, and
-#: a new session (new app id) re-verifies from the parquet input.
-_DECON_GUARD_OK: set[tuple[str, str]] = set()
-
-
-def _invalidate_decon_guard(spark) -> None:
-    """catalog.invalidate() hook (ADVICE r15): a same-session in-place
-    parquet rewrite leaves the (applicationId, sf_dir) memo key
-    unchanged, so without this the 32-bit pack-slot guard would be
-    silently skipped for the rewritten data. Conservatively drops every
-    memo of this application (newSession shares the applicationId)."""
-    app = spark.sparkContext.applicationId
-    for key in [k for k in _DECON_GUARD_OK if k[0] == app]:
-        _DECON_GUARD_OK.discard(key)
-
-
-_catalog.register_invalidation_hook(_invalidate_decon_guard)
-
-
 def _decon_guard_eval_ids(spark, sf_dir: str, ev_ids_sql: str) -> None:
     """Fail loudly if an eval id would overflow the 32-bit pack slot.
 
@@ -2088,20 +1985,31 @@ def _decon_guard_eval_ids(spark, sf_dir: str, ev_ids_sql: str) -> None:
     reaches 2^32 (a multi-billion-vector corpus) — decode would then
     return a WRONG id and score silently; fail loudly instead, same
     move as the IVF packed-argmin bound above (one scalar agg over the
-    ~1% eval slice, trivially bounded). Memoized per (session, dataset):
-    see _DECON_GUARD_OK. ``ev_ids_sql`` is a SELECT producing the
-    ``eval_id`` column — only parsed/run on a memo miss.
+    ~1% eval slice, trivially bounded). ``ev_ids_sql`` is a SELECT
+    producing the ``eval_id`` column — only parsed/run on a memo miss.
+
+    Memoized per (session, dataset) in the catalog's session store (kind
+    "decon_guard"): the guard asserts a DATASET invariant (max id fits
+    the 32-bit pack slot), so once per (session, dataset) is exactly as
+    sound as per-call, and the per-call form billed one extra Spark job
+    (~0.25 s driver-side action) to EVERY decon invocation inside the
+    bench's timed region (r15 probe; guide §5 — no driver actions in
+    query paths). Not a result cache: nothing about the query's OUTPUT
+    is memoized; a new session re-verifies from the parquet input, and
+    catalog.invalidate drops the memo so a same-session in-place rewrite
+    is re-checked too (ADVICE r15).
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _DECON_GUARD_OK:
-        return
-    mx = spark.sql(f"SELECT MAX(eval_id) FROM ({ev_ids_sql})").first()[0]
-    if mx is not None and mx >= _DECON_ID_SPAN - 1:
-        raise ValueError(
-            f"decontaminate_embedding packs eval_id into 32 bits "
-            f"(got max {mx}): re-key the eval split or widen the pack"
-        )
-    _DECON_GUARD_OK.add(key)
+
+    def check() -> bool:
+        mx = spark.sql(f"SELECT MAX(eval_id) FROM ({ev_ids_sql})").first()[0]
+        if mx is not None and mx >= _DECON_ID_SPAN - 1:
+            raise ValueError(
+                f"decontaminate_embedding packs eval_id into 32 bits "
+                f"(got max {mx}): re-key the eval split or widen the pack"
+            )
+        return True
+
+    _catalog.memo(spark, ("decon_guard", sf_dir), check)
 
 
 #: Packed score (train_id, pk): cosine + eval-id in one BIGINT.

@@ -198,11 +198,6 @@ SELECT key, seq, val FROM merged WHERE op IS NULL OR op <> 'D'
 """
 
 
-#: (applicationId, session, sf_dir) -> built MOR table path; see the
-#: build-once note inside _cdc_read_mor_spark.
-_MOR_TABLES: dict[tuple, str] = {}
-
-
 def _cdc_read_mor_spark(spark, sf_dir):
     """Drive the REAL merge-on-read reader (streaming.read_cdc_mor) over a
     deterministically-built MOR table: the pre-cutoff changes are
@@ -216,36 +211,41 @@ def _cdc_read_mor_spark(spark, sf_dir):
     adds). The DuckDB oracle replays the identical base/tail/merge
     arithmetic relationally, so the driver row vouches for the reader's
     on-storage layout handling, not just the SQL."""
+    import shutil
     import tempfile
 
     from pyspark.sql import functions as F
 
-    from .. import streaming
+    from .. import catalog, streaming
     from . import maintenance
+
+    def build() -> str:
+        cut = spark.sql(_CDC_MOR_CUTOFF).first()["cut"]
+        changes = spark.sql(_CDC_MOR_CHANGES)
+        table = tempfile.mkdtemp(prefix="cdc-mor-read-")
+        base = streaming._latest_per_key(
+            changes.where(F.col("seq") <= cut), ["key"], "seq"
+        )
+        maintenance.versioned_write(spark, base, table)
+        tail = changes.where(F.col("seq") > cut)
+        tail.where(F.col("seq") % 2 == 0).write.parquet(f"{table}/log/b=0")
+        tail.where(F.col("seq") % 2 == 1).write.parquet(f"{table}/log/b=1")
+        return table
 
     # Build once per (session, sf_dir) and reuse: the registry entry is
     # re-invoked by every oracle sweep and driver check, and an uncached
     # build would leave a fresh orders-scale temp dir (and pay the full
     # snapshot+log write) per call (round-7 review finding). The dir must
-    # outlive this call — the returned DataFrame reads it lazily — so
-    # the bound is one dir per session+fixture, reclaimed by the OS tmp
-    # cleaner after the session.
-    key = (spark.sparkContext.applicationId, id(spark), sf_dir)
-    if key in _MOR_TABLES:
-        return streaming.read_cdc_mor(
-            spark, _MOR_TABLES[key], op_col="op", keys=["key"], seq_col="seq"
-        )
-    table = tempfile.mkdtemp(prefix="cdc-mor-read-")
-    cut = spark.sql(_CDC_MOR_CUTOFF).first()["cut"]
-    changes = spark.sql(_CDC_MOR_CHANGES)
-    base = streaming._latest_per_key(
-        changes.where(F.col("seq") <= cut), ["key"], "seq"
+    # outlive this call — the returned DataFrame reads it lazily — so it
+    # lives in the catalog's session store (kind "cdc_mor") until
+    # catalog.invalidate releases it, which removes the dir; the next
+    # call then rebuilds from the current data.
+    table = catalog.memo(
+        spark,
+        ("cdc_mor", sf_dir),
+        build,
+        release=lambda path: shutil.rmtree(path, ignore_errors=True),
     )
-    maintenance.versioned_write(spark, base, table)
-    tail = changes.where(F.col("seq") > cut)
-    tail.where(F.col("seq") % 2 == 0).write.parquet(f"{table}/log/b=0")
-    tail.where(F.col("seq") % 2 == 1).write.parquet(f"{table}/log/b=1")
-    _MOR_TABLES[key] = table
     return streaming.read_cdc_mor(
         spark, table, op_col="op", keys=["key"], seq_col="seq"
     )

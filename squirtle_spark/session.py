@@ -1,7 +1,8 @@
 """SparkSession factory.
 
-Local test profile runs ``local[$SPARK_GRAFT_CPUS]`` (default 32) but every
-knob is chosen so the same code lands well on a 1000-executor cluster:
+Local test profile runs ``local[$SPARK_GRAFT_CPUS]`` (default: this
+process's cores; heap ``$SPARK_GRAFT_DRIVER_MEM``, default ~60% of RAM) but
+every knob is chosen so the same code lands well on a 1000-executor cluster:
 
 - AQE on (runtime coalescing, skew-join splitting, dynamic join strategy) —
   at 100 TB the static ``shuffle.partitions`` is always wrong somewhere, AQE
@@ -26,7 +27,16 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """~60% of the host's MemTotal as a JVM heap size (``"<n>m"``); the
+    rest is left to off-heap use, Python workers and the OS."""
+    with open(meminfo) as f:
+        total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{total_kb * 6 // 10 // 1024}m"
+
 
 #: Confs that are runtime-settable and load-bearing for correctness; applied
 #: even when getOrCreate() returns a pre-existing session (which silently
@@ -179,6 +189,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession."""
     cpus = cpus or DEFAULT_CPUS
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
     builder = SparkSession.builder.appName(app_name)
     # Let an externally configured master (spark-submit/cluster) win; only
     # default to local[] when nothing else is set. Under spark-submit the
@@ -195,7 +206,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Only effective when the JVM is launched from this process (plain
         # `python`); under spark-submit the submit-time value wins.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():

@@ -50,22 +50,124 @@ def test_matview_mode_matches_local(spark, sf_dir, tmp_path, mode, reset_matview
     catalog.invalidate(spark)
 
 
-def test_invalidate_drops_matviews_and_pq_index(spark, sf_dir):
-    """invalidate() must forget this session's materializations: a caller
-    that rewrote parquet under the same path would otherwise read stale
-    checkpointed rows forever (ADVICE r9 — the cache key can't see a
-    same-dir rewrite)."""
+def _populate_matview(s, sf_dir):
     from squirtle_spark.operators import similarity
 
-    _rows(spark, sf_dir, "dedup_minhash_lsh")
-    _rows(spark, sf_dir, "ann_pq_topk")
-    assert any(k[1] == id(spark) for k in catalog._MATVIEWS)
-    assert any(k[1] == id(spark) for k in similarity._PQ_INDEX)
+    similarity._emb_view(s, sf_dir)
+    return ("matview", sf_dir, "emb_normed")
 
-    catalog.invalidate(spark)
-    assert not any(k[1] == id(spark) for k in catalog._MATVIEWS)
-    assert not any(k[1] == id(spark) for k in similarity._PQ_INDEX)
-    assert not any(k[1] == id(spark) for k in similarity._PQ_CODES)
+
+def _populate_pq_index(s, sf_dir):
+    from squirtle_spark.operators import similarity
+
+    similarity._pq_index(s, sf_dir, ivf=False)
+    return ("pq_index", sf_dir, False, similarity.N_CELLS)
+
+
+def _populate_brute_q(s, sf_dir):
+    from squirtle_spark.operators import similarity
+
+    similarity._brute_query_block(s, sf_dir)
+    return ("brute_q", sf_dir)
+
+
+def _populate_decon_guard(s, sf_dir):
+    from squirtle_spark.operators import similarity
+
+    similarity._decon_guard_eval_ids(s, sf_dir, "SELECT 1 AS eval_id")
+    return ("decon_guard", sf_dir)
+
+
+def _populate_cdc_mor(s, sf_dir):
+    from squirtle_spark.operators import warehouse
+
+    warehouse._cdc_read_mor_spark(s, sf_dir)
+    return ("cdc_mor", sf_dir)
+
+
+@pytest.mark.parametrize(
+    "populate",
+    [
+        lambda s, sf_dir: ("registered",),
+        _populate_matview,
+        _populate_pq_index,
+        _populate_brute_q,
+        _populate_decon_guard,
+        _populate_cdc_mor,
+    ],
+    ids=["registered", "matview", "pq_index", "brute_q", "decon_guard", "cdc_mor"],
+)
+def test_invalidate_drops_matviews_and_pq_index(spark, sf_dir, populate):
+    """invalidate() must forget every entry kind this session holds: a
+    caller that rewrote parquet under the same path would otherwise read
+    stale materializations forever (ADVICE r9 — the cache key can't see
+    a same-dir rewrite). Another session's entry of the same kind and
+    key survives. (The "ckpt_deletes" kind is covered by
+    test_reliable_eviction_defers_checkpoint_delete.)"""
+    mine, other = spark.newSession(), spark.newSession()
+    for s in (mine, other):
+        catalog.register_all(s, sf_dir)
+        key = populate(s, sf_dir)
+        assert catalog.entry(s, *key) is not None
+
+    catalog.invalidate(mine)
+    assert catalog.entry(mine, *key) is None
+    assert catalog.entry(other, *key) is not None
+    catalog.invalidate(other)
+    assert catalog.entry(other, *key) is None
+
+
+def test_register_all_per_session(spark, sf_dir):
+    """Registration is per SESSION: spark.newSession() shares the
+    applicationId but starts with an empty temp-view catalog, so it must
+    get its own views (an app-keyed registration skipped it and
+    ``table("bid")`` failed with TABLE_OR_VIEW_NOT_FOUND), and neither
+    session's matviews may be served to the other."""
+    catalog.register_all(spark, sf_dir)
+    s2 = spark.newSession()
+    catalog.register_all(s2, sf_dir)
+    assert s2.table("bid").count() == spark.table("bid").count() > 0
+
+    sql = "SELECT 7 AS x"
+    v1 = catalog.session_matview(spark, "per_session", sf_dir, sql)
+    v2 = catalog.session_matview(s2, "per_session", sf_dir, sql)
+    assert v1 != v2
+    assert s2.catalog.tableExists(v2) and not s2.catalog.tableExists(v1)
+    assert spark.catalog.tableExists(v1) and not spark.catalog.tableExists(v2)
+    catalog.invalidate(s2)
+    catalog.clear_matviews(spark)
+
+
+def test_invalidate_rebuilds_mor_table(spark, sf_dir):
+    """After invalidate() the next cdc_read_mor must rebuild its MOR table
+    from the current data, and releasing the old table removes its temp
+    dir (it used to survive invalidate and keep being read)."""
+    import os
+    import re
+
+    from squirtle_spark.operators import warehouse
+
+    def table_dir(df):
+        (d,) = {
+            "/" + re.match(r"file:/*(.*?/cdc-mor-read-[^/]+)/", f).group(1)
+            for f in df.inputFiles()
+        }
+        return d
+
+    s = spark.newSession()
+    catalog.register_all(s, sf_dir, force=True)
+    first = warehouse._cdc_read_mor_spark(s, sf_dir)
+    rows = sorted(map(tuple, first.collect()))
+    old = table_dir(first)
+    assert table_dir(warehouse._cdc_read_mor_spark(s, sf_dir)) == old  # reused
+
+    catalog.invalidate(s)
+    assert not os.path.exists(old)
+    catalog.register_all(s, sf_dir)
+    again = warehouse._cdc_read_mor_spark(s, sf_dir)
+    assert table_dir(again) != old
+    assert sorted(map(tuple, again.collect())) == rows
+    catalog.invalidate(s)
 
 
 def test_matview_eviction_exempts_build_inputs(spark, sf_dir, monkeypatch):
@@ -74,18 +176,21 @@ def test_matview_eviction_exempts_build_inputs(spark, sf_dir, monkeypatch):
     view the in-flight build reads (ADVICE r9: fill the cache, then
     build a relation referencing the oldest entry — pre-fix this raised
     TABLE_OR_VIEW_NOT_FOUND)."""
-    catalog.clear_matviews(spark)
+    # an empty store of bound 2, so A and B fill it and nothing else counts
+    monkeypatch.setattr(catalog, "_STORE", {})
     va = catalog.session_matview(spark, "evict_a", sf_dir, "SELECT 1 AS x")
     vb = catalog.session_matview(spark, "evict_b", sf_dir, "SELECT 2 AS x")
-    monkeypatch.setattr(catalog, "_MATVIEW_MAX", 2)
+    monkeypatch.setattr(catalog, "_ENTRY_MAX", 2)
     # builds C under a full cache; its SQL references A (the oldest entry,
     # the default eviction victim) — B must be evicted instead
     vc = catalog.session_matview(
         spark, "evict_c", sf_dir, f"SELECT x + 10 AS x FROM {va}"
     )
     assert spark.sql(f"SELECT x FROM {vc}").first()["x"] == 11
-    keys = {k[3] for k in catalog._MATVIEWS if k[1] == id(spark)}
-    assert "evict_a" in keys and "evict_c" in keys and "evict_b" not in keys
+    assert catalog.entry(spark, "matview", sf_dir, "evict_a") is not None
+    assert catalog.entry(spark, "matview", sf_dir, "evict_c") is not None
+    assert catalog.entry(spark, "matview", sf_dir, "evict_b") is None
+    assert not spark.catalog.tableExists(vb)
     catalog.clear_matviews(spark)
 
 
@@ -93,7 +198,7 @@ def test_clear_matviews_drops_views_and_handles(spark, sf_dir):
     v = catalog.session_matview(spark, "clear_me", sf_dir, "SELECT 42 AS x")
     assert spark.sql(f"SELECT x FROM {v}").first()["x"] == 42
     catalog.clear_matviews(spark)
-    assert not any(k[1] == id(spark) for k in catalog._MATVIEWS)
+    assert catalog.entry(spark, "matview", sf_dir, "clear_me") is None
     assert not spark.catalog.tableExists(v)
 
 
@@ -160,14 +265,15 @@ def test_reliable_eviction_defers_checkpoint_delete(
 
     sess = spark.newSession()
     catalog.configure_matview("reliable", checkpoint_dir=str(tmp_path / "ck"))
-    # cap the cache right above its current size so the SECOND insert
-    # below evicts the FIRST (this session's oldest) and nothing else
-    monkeypatch.setattr(catalog, "_MATVIEW_MAX", len(catalog._MATVIEWS) + 1)
+    # an empty store of bound 1, so the SECOND insert below evicts the
+    # FIRST (this session's oldest) and nothing else
+    monkeypatch.setattr(catalog, "_STORE", {})
+    monkeypatch.setattr(catalog, "_ENTRY_MAX", 1)
     catalog.session_matview(
         sess, "evict_a", sf_dir, "SELECT id AS x FROM RANGE(7)"
     )
-    key_a = (sess.sparkContext.applicationId, id(sess), sf_dir, "evict_a")
-    df_a = catalog._MATVIEWS[key_a][1]
+    key_a = ("matview", sf_dir, "evict_a")
+    (df_a,) = catalog.entry(sess, *key_a).frames
     p = catalog._checkpoint_path(df_a)
     assert p  # reliable mode really wrote checkpoint files
     local = re.sub(r"^file:/*", "/", p)
@@ -176,16 +282,16 @@ def test_reliable_eviction_defers_checkpoint_delete(
     catalog.session_matview(
         sess, "evict_b", sf_dir, "SELECT id AS y FROM RANGE(8)"
     )
-    assert key_a not in catalog._MATVIEWS  # evicted
+    assert catalog.entry(sess, *key_a) is None  # evicted
     # files survive eviction (consumers), the evicted frame still works,
     # and the path is queued for deferred deletion
     assert os.path.exists(local)
     assert df_a.count() == 7
-    assert p in catalog._DEFERRED_CKPT_DELETES.get(id(sess), [])
+    assert p in catalog.entry(sess, "ckpt_deletes").value
 
     catalog.clear_matviews(sess)
     assert not os.path.exists(local)
-    assert id(sess) not in catalog._DEFERRED_CKPT_DELETES
+    assert catalog.entry(sess, "ckpt_deletes") is None
 
 
 def test_persist_mode_warns_about_cliffs(reset_matview_mode):

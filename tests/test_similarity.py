@@ -127,6 +127,7 @@ def test_ivfpq_recall_and_cell_pruning(spark, sf_dir):
     cell is one of its query's probed cells, and every query's candidate
     set is a SUBSET of what full-corpus PQ ADC could rank — i.e. the
     composition only ever prunes, never invents pairs."""
+    from squirtle_spark import catalog
     from squirtle_spark.operators import similarity as sim
 
     qs = load_all()
@@ -137,8 +138,9 @@ def test_ivfpq_recall_and_cell_pruning(spark, sf_dir):
     assert r >= 0.2, f"IVF-PQ recall@5 {r:.2f} below floor"
 
     # pruning contract from the materialized index itself
-    key = (spark.sparkContext.applicationId, id(spark), sf_dir, True, sim.N_CELLS)
-    _, codes_view, cents_view = sim._PQ_INDEX[key]
+    _, codes_view, cents_view = catalog.entry(
+        spark, "pq_index", sf_dir, True, sim.N_CELLS
+    ).views
     cells = {
         r["c_id"]: r["cell"]
         for r in spark.table(codes_view).select("c_id", "cell").distinct().collect()
@@ -184,9 +186,9 @@ def test_ivfpq_driver_routing_matches_distributed(spark, sf_dir):
     from squirtle_spark.operators import similarity as sim
 
     catalog.register_all(spark, sf_dir)
-    views = sim._pq_index_views(spark, sf_dir, ivf=True)
-    key = sim._pq_key(spark, sf_dir, True, sim.N_CELLS)
-    routed = sorted(sim._route_probes(key, sim.N_PROBE))
+    index = sim._pq_index(spark, sf_dir, ivf=True)
+    views = index.views
+    routed = sorted(sim._route_probes(index, sim.N_PROBE))
     assert routed and len(routed) == sim.N_QUERIES * sim.N_PROBE
 
     _, _, q_dist = sim._ann_pq(dl.SPARK, ivf=True, views=views)
@@ -261,33 +263,32 @@ def test_stream_ann_probe_equals_batch(spark, sf_dir, tmp_path):
     assert got == exp
 
 
-def test_pq_index_cache_bounded(spark, sf_dir):
-    """_PQ_INDEX eviction (VERDICT r6 item 8): a session sweeping many
-    sf_dirs must not grow the index cache (and its checkpointed code
-    tables) without bound. Seed the cache to its cap with foreign-session
-    entries; building one more must evict rather than exceed the cap, and
-    the fresh entry must be the one served."""
+def test_pq_index_cache_bounded(spark, sf_dir, monkeypatch):
+    """PQ-index eviction (VERDICT r6 item 8): a session sweeping many
+    sf_dirs must not grow the session store (and its checkpointed code
+    tables) without bound. Seed the store to its cap with foreign-session
+    entries; building one more index must evict rather than exceed the
+    cap, and the fresh entry must be the one served."""
     from squirtle_spark import catalog
     from squirtle_spark.operators import similarity as sim
 
     catalog.register_all(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, id(spark), sf_dir, False, sim.N_CELLS)
-    # a cache hit returns early without evicting — force the build path
-    # (earlier suite tests may already have built this index)
-    sim._PQ_INDEX.pop(key, None)
-    fakes = [
-        ("fake-app", 0, f"/fake/{i}", False, sim.N_CELLS)
-        for i in range(sim._PQ_INDEX_MAX)
-    ]
-    for i, k in enumerate(fakes):
-        sim._PQ_INDEX.setdefault(k, (f"f{i}_cb", f"f{i}_codes", f"f{i}_cents"))
-    try:
-        views = sim._pq_index_views(spark, sf_dir, ivf=False)
-        assert len(sim._PQ_INDEX) <= sim._PQ_INDEX_MAX
-        assert sim._PQ_INDEX[key] == views
-    finally:
-        for k in fakes:
-            sim._PQ_INDEX.pop(k, None)
+    # a store holding only the foreign fakes: a cache hit would return
+    # early without evicting, so the index must be built here
+    fakes = {
+        ("fake-session", "pq_index", f"/fake/{i}", False, sim.N_CELLS): catalog.Entry(
+            None, views=(f"f{i}_cb", f"f{i}_codes", f"f{i}_cents")
+        )
+        for i in range(catalog._ENTRY_MAX)
+    }
+    monkeypatch.setattr(catalog, "_STORE", dict(fakes))
+    index = sim._pq_index(spark, sf_dir, ivf=False)
+    bounded = [e for e in catalog._STORE.values() if e.views]
+    assert len(bounded) == catalog._ENTRY_MAX
+    assert catalog.entry(spark, "pq_index", sf_dir, False, sim.N_CELLS).value == index
+    # the oldest foreign fake made room; the others are untouched
+    assert next(iter(fakes)) not in catalog._STORE
+    catalog.invalidate(spark)
 
 
 def test_pq_shared_oracle_equals_registered(sf_dir):
