@@ -557,18 +557,19 @@ def _defer_checkpoint_delete(
         ).value.append(p)
 
 
-def _cleanup_deferred_at_exit() -> None:
+def _cleanup_at_exit() -> None:
     # the JVM may already be gone at interpreter exit: clean what we can
-    # reach OS-side (local file: paths); remote schemes stay for the
-    # cluster's checkpoint-dir retention policy
-    for key in [k for k in _STORE if k[1] == "ckpt_deletes"]:
-        for p in _STORE.pop(key).value:
+    # reach OS-side (MOR temp dirs, local deferred checkpoint files);
+    # remote schemes stay for the cluster's checkpoint-dir retention policy
+    for key in [k for k in _STORE if k[1] in ("cdc_mor", "ckpt_deletes")]:
+        e = _STORE.pop(key)
+        for p in e.value if key[1] == "ckpt_deletes" else [e.value]:
             if "://" in p and not p.startswith("file:"):
                 continue
             shutil.rmtree(re.sub(r"^file:/*", "/", p), ignore_errors=True)
 
 
-atexit.register(_cleanup_deferred_at_exit)
+atexit.register(_cleanup_at_exit)
 
 
 def _unpersist_matview(df: DataFrame) -> None:

@@ -14,6 +14,12 @@ every knob is chosen so the same code lands well on a 1000-executor cluster:
   (and comparable against the DuckDB oracle, which is UTC-naive).
 - The master is only set when none is configured, so ``spark-submit
   --master`` / cluster managers win over the local default.
+- Local sessions on the local file system write streaming checkpoints
+  (offsets, commits, sink logs, state-store deltas) through Spark's
+  FileSystem-based checkpoint manager: one ``rename(2)`` per file instead
+  of FileContext's rename path, which without libhadoop forks ``readlink``
+  about 8 times per rename (SCALING.md, "Checkpoint-file forks"). Cluster
+  sessions keep Spark's default manager.
 """
 
 from __future__ import annotations
@@ -68,6 +74,39 @@ STATE_STORE_PROVIDERS = {
 }
 
 _STATE_STORE_KEY = "spark.sql.streaming.stateStore.providerClass"
+
+_CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def configure_checkpoint_manager(spark: SparkSession) -> str | None:
+    """Write streaming checkpoints through the FileSystem-based manager
+    when the session is ``local[...]`` on the local file system; return
+    the class set, or None (cluster masters and non-``file:`` default
+    file systems keep Spark's default).
+
+    Spark's default manager renames through FileContext, and Hadoop's
+    local FileContext without libhadoop forks ``readlink`` about 8 times
+    per rename — most of a micro-batch's checkpoint cost on a local
+    profile. The FileSystem manager renames with one ``rename(2)``; it
+    keeps the exists-then-rename check for create-if-absent that the
+    local FileContext does too, and its overwrite rename is one atomic
+    ``rename(2)`` instead of delete-then-rename. The conf is runtime-
+    settable and read when a query (or state store) opens its
+    checkpoint files, so a reused session gets it for its next query.
+    """
+    master = spark.sparkContext.master
+    if master != "local" and not master.startswith("local["):
+        return None
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if jvm.org.apache.hadoop.fs.FileSystem.getDefaultUri(conf).getScheme() != "file":
+        return None
+    spark.conf.set(_CHECKPOINT_MANAGER_KEY, _LOCAL_CHECKPOINT_MANAGER)
+    return _LOCAL_CHECKPOINT_MANAGER
 
 
 def configure_state_store(spark: SparkSession, provider: str | None = None) -> str | None:
@@ -219,6 +258,7 @@ def get_spark(
     for k, v in RUNTIME_CONFS.items():
         spark.conf.set(k, v)
     configure_state_store(spark)  # env-gated ($SPARK_GRAFT_STATE_STORE)
+    configure_checkpoint_manager(spark)  # local[...] on file: only
     from . import streaming as _streaming  # lazy: avoids import cycle
 
     # one-time state-pressure warning before the measured HDFSBacked

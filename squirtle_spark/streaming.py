@@ -909,6 +909,11 @@ def run_nexmark_q3_stream(
     )
 
 
+#: Reserved epoch partition of the flush rows (write_flush_epoch,
+#: write_keyed_flush_epoch): past every real epoch, so it replays last.
+_FLUSH_EPOCH = 999_999
+
+
 def write_flush_epoch(
     spark: SparkSession,
     data_dir: str,
@@ -930,12 +935,29 @@ def write_flush_epoch(
     are the event-time replacement for that sweep.)
 
     Idempotent per dir: the sentinel lands in a reserved epoch partition
-    that is overwritten, not appended, on re-use.
+    that is overwritten, not appended, on re-use, and its time comes from
+    the real epochs only. A call that finds that same sentinel already in
+    place — one row, same time and keys, written after every data file so
+    the replay still reads it last — writes nothing.
     """
-    latest = spark.read.parquet(data_dir).orderBy(F.col(ts_col).desc()).limit(1)
-    sentinel = latest.withColumn(
-        ts_col, F.expr(f"timestampadd(SECOND, {advance_s}, {ts_col})")
-    ).withColumn("epoch", F.lit(999_999).cast("long"))
+    base = spark.read.parquet(data_dir)
+    flush = F.col("epoch") == _FLUSH_EPOCH
+    mtime = F.col("_metadata.file_modification_time")
+    ts = F.col(ts_col)
+    shifted = F.timestamp_add("SECOND", F.lit(advance_s), ts)
+    same = (
+        (F.count_if(flush) == 1)
+        & (F.max(F.when(flush, ts)) == F.max(F.when(~flush, shifted)))
+        & (F.min(F.when(flush, mtime)) >= F.max(F.when(~flush, mtime)))
+    )
+    for k in neg_keys:
+        same &= F.max(F.when(flush, F.col(k))) == -1
+    if base.agg(same).first()[0]:
+        return
+    latest = base.where(~flush).orderBy(ts.desc()).limit(1)
+    sentinel = latest.withColumn(ts_col, shifted).withColumn(
+        "epoch", F.lit(_FLUSH_EPOCH).cast("long")
+    )
     for c in neg_keys:
         sentinel = sentinel.withColumn(
             c, F.lit(-1).cast(dict(latest.dtypes)[c])
@@ -968,7 +990,7 @@ def write_keyed_flush_epoch(
         base.where(~F.col(flush_col))
         .dropDuplicates([key_col])
         .withColumn(flush_col, F.lit(True))
-        .withColumn("epoch", F.lit(999_999).cast("long"))
+        .withColumn("epoch", F.lit(_FLUSH_EPOCH).cast("long"))
     )
     (
         flush.write.mode("overwrite")

@@ -170,6 +170,37 @@ def test_invalidate_rebuilds_mor_table(spark, sf_dir):
     catalog.invalidate(s)
 
 
+def test_exit_removes_mor_temp_dir(tmp_path):
+    """A process that ends without catalog.invalidate still removes the
+    cdc_read_mor temp dir its session store holds (the exit hook used to
+    clean only deferred checkpoint files, so these dirs piled up in the
+    system temp dir)."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    mor = tmp_path / "cdc-mor-read-exit"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = textwrap.dedent(
+        f"""
+        import os, shutil
+        from types import SimpleNamespace
+        from squirtle_spark import catalog
+
+        def build():
+            os.makedirs({str(mor)!r} + "/log/b=0")
+            return {str(mor)!r}
+
+        catalog.memo(SimpleNamespace(_squirtle_sid="s"), ("cdc_mor", "sf"), build,
+                     release=lambda p: shutil.rmtree(p, ignore_errors=True))
+        """
+    )
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")]))}
+    subprocess.run([sys.executable, "-c", code], check=True, cwd=repo, env=env, timeout=120)
+    assert tmp_path.exists() and not mor.exists()
+
+
 def test_matview_eviction_exempts_build_inputs(spark, sf_dir, monkeypatch):
     """A staged pipeline hands earlier stages' matview NAMES to a later
     build_sql; eviction pressure during that build must never drop a

@@ -1975,6 +1975,54 @@ def test_stateful_trailing_window_generic_key(spark, tmp_path):
     assert by_eid[6]["n_trailing_hour"] == 2
 
 
+def test_write_flush_epoch_is_idempotent(spark, tmp_path):
+    """The sentinel's time comes from the real epochs, not from the
+    sentinel a previous call wrote (that moved it one ``advance_s``
+    further per call), and a call that finds it in place writes nothing:
+    the sentinel file stays the same file."""
+    import datetime as dt
+
+    bids = sources.nexmark_bids(spark, 100, 4).withColumn(
+        "epoch", F.unix_timestamp(F.col("b_date_time").cast("timestamp")) % 100000
+    )
+    data_dir = tmp_path / "bids"
+    streaming.write_epoch_files(bids, str(data_dir))
+    hi = bids.agg(F.max(F.col("b_date_time").cast("timestamp"))).first()[0]
+    flush_dir = data_dir / f"epoch={streaming._FLUSH_EPOCH}"
+
+    def sentinel():
+        (row,) = (
+            spark.read.parquet(str(data_dir))
+            .where(F.col("epoch") == streaming._FLUSH_EPOCH)
+            .collect()
+        )
+        files = {
+            f.name: f.stat().st_mtime_ns
+            for f in flush_dir.iterdir()
+            if f.name.endswith(".parquet")
+        }
+        return row, files
+
+    streaming.write_flush_epoch(spark, str(data_dir), "b_date_time", 3600, ["auction", "bidder"])
+    first, first_files = sentinel()
+    streaming.write_flush_epoch(spark, str(data_dir), "b_date_time", 3600, ["auction", "bidder"])
+    second, second_files = sentinel()
+
+    assert first["b_date_time"] == second["b_date_time"] == hi + dt.timedelta(seconds=3600)
+    assert first["auction"] == first["bidder"] == -1
+    assert second_files == first_files and len(first_files) == 1
+
+    # a data file written after the sentinel would replay after it (the
+    # file source reads in modification-time order): rewrite the sentinel
+    bids.where(F.col("epoch") == bids.agg(F.min("epoch")).first()[0]).write.mode(
+        "append"
+    ).partitionBy("epoch").parquet(str(data_dir))
+    streaming.write_flush_epoch(spark, str(data_dir), "b_date_time", 3600, ["auction", "bidder"])
+    third, third_files = sentinel()
+    assert third["b_date_time"] == first["b_date_time"]
+    assert third_files.keys() != first_files.keys()
+
+
 def test_flushed_dir_does_not_contaminate_other_topologies(spark, sf_dir, tmp_path):
     """A dir mutated by write_flush_epoch (q4/q8/q9's watermark flush) is
     later re-read by q5/q11: the sentinel row must never surface as an

@@ -158,10 +158,10 @@ def build_fixture(base: str, out: str, mult: int) -> dict:
 def run_lane(mult: int, queries: list[str], reps: int, out_path: str) -> None:
     from squirtle_spark import catalog
     from squirtle_spark.registry import load_all
-    from squirtle_spark.session import get_spark
+    from squirtle_spark.session import DEFAULT_CPUS, get_spark
 
     base = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_CPUS
     tmp = tempfile.mkdtemp(prefix=f"scale{mult}x-")
     try:
         t0 = time.perf_counter()
@@ -278,7 +278,9 @@ def main() -> None:
         if "--queries" in args
         else HEAVY
     )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from squirtle_spark.session import DEFAULT_CPUS
+
+    cpus = DEFAULT_CPUS
     out = (
         args[args.index("--out") + 1]
         if "--out" in args
