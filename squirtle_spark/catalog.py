@@ -284,7 +284,8 @@ class Entry(NamedTuple):
 #: applicationId, and CPython can reuse an id() after a stopped session
 #: is collected — neither may ever serve one session another's entries.
 #: Kinds: "registered" (sf_dir of the temp views), "matview", "pq_index",
-#: "brute_q", "decon_guard", "cdc_mor" and "ckpt_deletes".
+#: "brute_q", "decon_guard", "cdc_mor", "ckpt_deletes" and
+#: "flush_listing" (a replay dir's listing after its flush sentinel).
 _STORE: dict[tuple, Entry] = {}
 #: Bound on live view-owning entries (matviews + PQ indexes): a long-
 #: lived session sweeping many sf_dirs would otherwise grow the cache

@@ -16,6 +16,20 @@ Parity map (SURVEY.md §2.9):
 
 Watermarks are strictly *more* than the reference offers — flock assumes
 in-order epochs and has no late-data story (window.rs sweep functions).
+
+Every NEXMark runner is one shape: flush its replay dirs
+(write_flush_epoch), replay them with ``epoch`` dropped, apply its
+streaming transform, drain it with ``_drain``, and finish in batch. The
+drain is the one place a runner's query is started, awaited, timed out
+and crash-injected. Its contract: an append-mode result drains into a
+parquet file sink (``result_path`` or ``{checkpoint}-out``) and comes
+back as a lazy read with the result's own schema — nothing crosses the
+driver; complete and update modes, which a file sink cannot take, drain
+into the memory sink and come back as a read of its table
+(``run_available_now`` collects it). ``metrics`` receives the
+drained query's state-operator summary (capture_state_metrics), and
+``crash_after_s`` stops the first run after a committed micro-batch and
+restarts it from the same checkpoint.
 """
 
 from __future__ import annotations
@@ -26,6 +40,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StatefulProcessor, StreamingQuery
+
+from . import catalog
 
 
 def write_epoch_files(df: DataFrame, path: str, epoch_col: str = "epoch") -> None:
@@ -136,18 +152,60 @@ def drop_flush_sentinels(df: DataFrame, keys: list[str]) -> DataFrame:
     return df.where(cond)
 
 
-def _drain_to_parquet_sink(
+#: Timestamp column and sentinel keys of each NEXMark replay-dir kind
+#: (the ``ts_col``/``neg_keys`` write_flush_epoch takes).
+_BIDS = ("b_date_time", ["auction", "bidder"])
+_AUCTIONS = ("a_date_time", ["a_id", "seller"])
+_PERSONS = ("p_date_time", ["p_id"])
+
+
+def _flush(spark: SparkSession, advance_s: int, *dirs: tuple) -> None:
+    """write_flush_epoch each ``(path, (ts_col, neg_keys))`` replay dir."""
+    for path, (ts_col, neg_keys) in dirs:
+        write_flush_epoch(spark, path, ts_col, advance_s, neg_keys)
+
+
+def _replay(spark: SparkSession, path: str, files_per_trigger: int) -> DataFrame:
+    """replay_stream without the replay's ``epoch`` partition column."""
+    return replay_stream(spark, path, files_per_trigger=files_per_trigger).drop(
+        "epoch"
+    )
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """``path``'s Hadoop FileSystem and Path: any URI scheme resolves."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _has_parquet_files(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` holds a visible parquet file (a drain that emitted
+    nothing leaves none, possibly no dir at all)."""
+    fs, p = _hadoop_path(spark, path)
+    return fs.exists(p) and any(
+        n.endswith(".parquet") and not n.startswith(("_", "."))
+        for n in (st.getPath().getName() for st in fs.listStatus(p))
+    )
+
+
+def _drain(
     result: DataFrame,
     *,
     checkpoint: str,
-    path: str,
+    out: str | None = None,
+    mode: str = "append",
     timeout_s: int,
     metrics: dict | None = None,
     crash_after_s: float | None = None,
-) -> None:
-    """Drain a bounded replay through an APPEND-mode parquet file sink —
-    the production result path (every batch's rows land distributed on
-    storage; nothing crosses back to the driver). ``metrics``, when
+) -> DataFrame:
+    """Drain a bounded replay with ``availableNow`` and return its result.
+
+    With ``out``, the append-mode result lands in a parquet file sink
+    there — the production result path, every batch's rows land
+    distributed on storage — and comes back as a lazy read with the
+    result's schema (empty if nothing was emitted). Without ``out`` it
+    drains into the memory sink, the one complete and update modes can
+    use, and comes back as a read of the sink's table. ``metrics``, when
     given, receives the final progress's state-operator summary
     (capture_state_metrics).
 
@@ -167,12 +225,21 @@ def _drain_to_parquet_sink(
     reimplemented pipeline."""
     import time as _time
 
+    spark = result.sparkSession
+    # full non-alnum sanitize: a '.' (or any other non-identifier char)
+    # in the checkpoint basename would make the memory table's name
+    # parse as db.table and lose the drained result
+    name = out or "mem_" + re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(checkpoint))
+
     def start() -> StreamingQuery:
+        w = result.writeStream
+        if out:
+            w = w.format("parquet").option("path", out)
+        else:
+            w = w.format("memory").queryName(name)
         return (
-            result.writeStream.format("parquet")
-            .option("path", path)
+            w.outputMode(mode)
             .option("checkpointLocation", checkpoint)
-            .outputMode("append")
             .trigger(availableNow=True)
             .start()
         )
@@ -182,21 +249,17 @@ def _drain_to_parquet_sink(
     if crash_after_s is not None:
         # The crash must land AFTER >= 1 committed micro-batch or the
         # "recovery" restarts from an empty checkpoint and proves
-        # nothing. crash_after_s is the target delay, but the stop is
-        # GATED on recentProgress being non-empty — on a slow host the
-        # wait extends up to the drain timeout and then fails loudly
-        # instead of recording a vacuous batches_before_crash=0 crash
-        # (ADVICE r14).
-        deadline = _time.time() + crash_after_s
+        # nothing: the stop is GATED on recentProgress being non-empty,
+        # waiting at most crash_after_s plus the drain timeout, and then
+        # fails loudly instead of recording a vacuous
+        # batches_before_crash=0 crash (ADVICE r14).
+        deadline = _time.time() + crash_after_s + timeout_s
         while _time.time() < deadline and q.isActive and not q.recentProgress:
-            _time.sleep(0.05)
-        hard_deadline = _time.time() + timeout_s
-        while _time.time() < hard_deadline and q.isActive and not q.recentProgress:
             _time.sleep(0.05)
         if q.isActive and not q.recentProgress:
             q.stop()
             raise RuntimeError(
-                f"crash injection for '{path}': no micro-batch committed "
+                f"crash injection for '{name}': no micro-batch committed "
                 f"within {timeout_s}s past the {crash_after_s}s target - "
                 "cannot stage a meaningful recovery"
             )
@@ -207,12 +270,18 @@ def _drain_to_parquet_sink(
         q.stop()  # interrupt mid-replay; commit log hides the partial batch
         q = start()
     if not q.awaitTermination(timeout_s):
+        # Partial results would make equality tests flaky and leak the query.
         q.stop()
-        raise TimeoutError(f"stream sink '{path}' still running after {timeout_s}s")
+        raise TimeoutError(f"stream '{name}' still running after {timeout_s}s")
     if metrics is not None:
         metrics.update(capture_state_metrics(q))
         if crash_info is not None:
             metrics["crash"] = crash_info
+    if not out:
+        return spark.table(name)
+    if not _has_parquet_files(spark, out):
+        return spark.createDataFrame([], result.schema)
+    return spark.read.schema(result.schema).parquet(out)
 
 
 def capture_state_metrics(q: StreamingQuery) -> dict:
@@ -377,15 +446,6 @@ def install_state_pressure_advisor(
     atexit.register(_detach)
 
 
-def _read_result_sink(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Lazily read an append-sink result dir. A drain that emitted zero
-    rows leaves no data files (possibly no dir at all), which must read
-    as an EMPTY result, not an error — the explicit schema covers both."""
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(path)
-
-
 def run_nexmark_q5_stream(
     spark: SparkSession,
     bids_path: str,
@@ -422,38 +482,24 @@ def run_nexmark_q5_stream(
     node and stall the frontier) and its auction=-1 count is dropped
     from the drained result.
     """
-    write_flush_epoch(
-        spark, bids_path, "b_date_time", flush_advance_s, ["auction", "bidder"]
-    )
-    stream = replay_stream(spark, bids_path, files_per_trigger=files_per_trigger)
-    if "epoch" in stream.columns:
-        stream = stream.drop("epoch")
+    _flush(spark, flush_advance_s, (bids_path, _BIDS))
+    stream = _replay(spark, bids_path, files_per_trigger)
     # NO sentinel filter in the streaming plan: Catalyst pushes a
     # deterministic key filter below the EventTimeWatermark node, and a
     # filtered-out sentinel never advances the frontier — the append-mode
     # agg would then hold its tail windows in state forever (the q8
     # join-input rule). The sentinel flows through as an auction=-1 count
     # in a far-future window and is dropped from the drained RESULT.
-    counts = (
-        _with_event_time(stream, "b_date_time")
-        .withWatermark("b_date_time", delay)
-        .groupBy(
-            F.window("b_date_time", "10 seconds", "5 seconds"), F.col("auction")
-        )
-        .agg(F.count("*").alias("num"))
-        .select(F.col("window.start").alias("starttime"), "auction", "num")
+    counts = hopping_agg(stream, "b_date_time", "auction", watermark=delay).select(
+        F.col("win_start").alias("starttime"), "auction", F.col("cnt").alias("num")
     )
-    out = result_path or f"{checkpoint}-out"
-    _drain_to_parquet_sink(
+    finalized = _drain(
         counts,
         checkpoint=checkpoint,
-        path=out,
+        out=result_path or f"{checkpoint}-out",
         timeout_s=timeout_s,
         metrics=metrics,
         crash_after_s=crash_after_s,
-    )
-    finalized = _read_result_sink(
-        spark, out, "starttime TIMESTAMP, auction BIGINT, num BIGINT"
     ).where(F.col("auction") >= 0)
     maxes = finalized.groupBy("starttime").agg(F.max("num").alias("maxn"))
     return (
@@ -489,12 +535,8 @@ def run_nexmark_q7_stream(
     of the q7 SQL (benchmarks/src/nexmark/query/q7.sql). The drained
     result equals the batch q7 exactly.
     """
-    write_flush_epoch(
-        spark, bids_path, "b_date_time", flush_advance_s, ["auction", "bidder"]
-    )
-    stream = replay_stream(spark, bids_path, files_per_trigger=files_per_trigger)
-    if "epoch" in stream.columns:
-        stream = stream.drop("epoch")
+    _flush(spark, flush_advance_s, (bids_path, _BIDS))
+    stream = _replay(spark, bids_path, files_per_trigger)
     # Sentinel flows THROUGH the agg (the q5/q8 watermark-pushdown rule):
     # it maxes only its own far-future window, which the join-back below
     # cannot match (the batch bid side drops sentinels).
@@ -506,10 +548,9 @@ def run_nexmark_q7_stream(
         .select(F.col("window.start").alias("win_start"), "maxprice")
     )
     out = result_path or f"{checkpoint}-out"
-    _drain_to_parquet_sink(
-        maxes, checkpoint=checkpoint, path=out, timeout_s=timeout_s, metrics=metrics
+    finalized = _drain(
+        maxes, checkpoint=checkpoint, out=out, timeout_s=timeout_s, metrics=metrics
     )
-    finalized = _read_result_sink(spark, out, "win_start TIMESTAMP, maxprice INT")
     bids = drop_flush_sentinels(
         spark.read.parquet(bids_path), ["auction", "bidder"]
     )
@@ -534,64 +575,6 @@ def run_nexmark_q7_stream(
     return spark.read.parquet(f"{out}-winners")
 
 
-def run_nexmark_q11_stream(
-    spark: SparkSession,
-    bids_path: str,
-    *,
-    checkpoint: str,
-    gap_s: int = 86_400,
-    watermark: str = "30 days",
-    files_per_trigger: int = 15,
-    timeout_s: int = 300,
-    metrics: dict | None = None,
-) -> DataFrame:
-    """Full NEXMark q11 (bid sessions per bidder) end-to-end as a stream on
-    Spark's native ``session_window`` — the state-store-backed session
-    operator (flock-function/src/aws/window/session.rs keeps per-key
-    session state in its arena; Spark's state store is the same design).
-    Complete mode re-emits the CURRENT session set each micro-batch
-    (sessions merge as bids arrive), so the drained result equals batch
-    ``nexmark_q11`` exactly — including the final, still-open sessions.
-    Complete mode is the always-current materialization: state holds (and
-    every batch re-emits) EVERY session ever seen, so it only fits
-    dashboards over bounded session populations. The operational,
-    state-bounded variant is ``run_nexmark_q11_append_stream`` below —
-    use that on an unbounded deployment.
-    """
-    stream = replay_stream(spark, bids_path, files_per_trigger=files_per_trigger)
-    if "epoch" in stream.columns:
-        stream = stream.drop("epoch")
-    sessions = (
-        # sentinel filter after the watermark: far-future flush rows must
-        # advance the frontier but never become a bidder=-1 session
-        drop_flush_sentinels(
-            _with_event_time(stream, "b_date_time").withWatermark(
-                "b_date_time", watermark
-            ),
-            ["auction", "bidder"],
-        )
-        .groupBy(F.col("bidder"), F.session_window("b_date_time", f"{gap_s} seconds"))
-        .agg(F.count("*").alias("bid_count"))
-        .select(
-            "bidder",
-            "bid_count",
-            F.col("session_window.start").alias("starttime"),
-            F.col("session_window.end").alias("endtime"),
-        )
-    )
-    rows = run_available_now(
-        sessions,
-        checkpoint=checkpoint,
-        mode="complete",
-        timeout_s=timeout_s,
-        metrics=metrics,
-    )
-    return spark.createDataFrame(
-        rows,
-        "bidder BIGINT, bid_count BIGINT, starttime TIMESTAMP, endtime TIMESTAMP",
-    )
-
-
 def run_nexmark_q11_append_stream(
     spark: SparkSession,
     bids_path: str,
@@ -614,8 +597,8 @@ def run_nexmark_q11_append_stream(
     session_window — each session emits ONCE, when the watermark passes
     its end, and its state row is evicted. State is bounded by the
     ACTIVE sessions inside gap + lateness, independent of how many
-    sessions the stream has ever produced — unlike the complete-mode
-    runner above, whose state and per-batch re-emission grow with the
+    sessions the stream has ever produced — unlike a complete-mode
+    session_window, whose state and per-batch re-emission grow with the
     total session count (a per-batch O(total-sessions) write at scale).
 
     Mechanics are the q5/q8 recipe: a finite replay needs the flush
@@ -633,37 +616,18 @@ def run_nexmark_q11_append_stream(
     stream==batch test pins this, and ``metrics`` records eviction
     (final state rows ≈ 1 sentinel session, not the peak).
     """
-    write_flush_epoch(
-        spark, bids_path, "b_date_time", flush_advance_s, ["auction", "bidder"]
-    )
-    stream = replay_stream(spark, bids_path, files_per_trigger=files_per_trigger)
-    if "epoch" in stream.columns:
-        stream = stream.drop("epoch")
-    sessions = (
-        _with_event_time(stream, "b_date_time")
-        .withWatermark("b_date_time", delay)
-        .groupBy(F.col("bidder"), F.session_window("b_date_time", f"{gap_s} seconds"))
-        .agg(F.count("*").alias("bid_count"))
-        .select(
-            "bidder",
-            "bid_count",
-            F.col("session_window.start").alias("starttime"),
-            F.col("session_window.end").alias("endtime"),
-        )
-    )
-    out = result_path or f"{checkpoint}-out"
-    _drain_to_parquet_sink(
+    _flush(spark, flush_advance_s, (bids_path, _BIDS))
+    stream = _replay(spark, bids_path, files_per_trigger)
+    sessions = session_agg(
+        stream, "b_date_time", "bidder", gap=f"{gap_s} seconds", watermark=delay
+    ).select("bidder", F.col("cnt").alias("bid_count"), "starttime", "endtime")
+    return _drain(
         sessions,
         checkpoint=checkpoint,
-        path=out,
+        out=result_path or f"{checkpoint}-out",
         timeout_s=timeout_s,
         metrics=metrics,
         crash_after_s=crash_after_s,
-    )
-    return _read_result_sink(
-        spark,
-        out,
-        "bidder BIGINT, bid_count BIGINT, starttime TIMESTAMP, endtime TIMESTAMP",
     ).where(F.col("bidder") >= 0)
 
 
@@ -680,12 +644,8 @@ def _q8_windowed_sides(
     watermark and the tumbling-window column — the inner and outer q8
     variants differ only in join type and output projection, so the
     stream setup lives once."""
-    ps = replay_stream(spark, persons_path, files_per_trigger=files_per_trigger)
-    au = replay_stream(spark, auctions_path, files_per_trigger=files_per_trigger)
-    if "epoch" in ps.columns:
-        ps = ps.drop("epoch")
-    if "epoch" in au.columns:
-        au = au.drop("epoch")
+    ps = _replay(spark, persons_path, files_per_trigger)
+    au = _replay(spark, auctions_path, files_per_trigger)
     # NO sentinel filter on the join inputs: Catalyst pushes a
     # deterministic key filter below the EventTimeWatermark node, and a
     # filtered-out sentinel never advances the frontier — the append-mode
@@ -746,17 +706,16 @@ def run_nexmark_q8_stream(
     joined = ps.join(
         au, (ps["p_id"] == au["seller"]) & (ps["w"] == au["w"])
     ).select("p_id", "name", ps["w"]["start"].alias("starttime"))
-    rows = run_available_now(
-        joined,
-        checkpoint=checkpoint,
-        mode="append",
-        timeout_s=timeout_s,
-        metrics=metrics,
-    )
     # post-drain sentinel drop (a flushed dir's p_id=-1/seller=-1 rows
     # can MATCH each other when their far-future windows align)
     return (
-        spark.createDataFrame(rows, "p_id BIGINT, name STRING, starttime TIMESTAMP")
+        _drain(
+            joined,
+            checkpoint=checkpoint,
+            out=f"{checkpoint}-out",
+            timeout_s=timeout_s,
+            metrics=metrics,
+        )
         .where(F.col("p_id") >= 0)
         .distinct()
     )
@@ -795,11 +754,7 @@ def run_nexmark_q8_outer_stream(
     after the drain. State is bounded to ~one window per side past the
     frontier, the same profile as the inner form.
     """
-    for path, ts, keys in (
-        (persons_path, "p_date_time", ["p_id"]),
-        (auctions_path, "a_date_time", ["a_id", "seller"]),
-    ):
-        write_flush_epoch(spark, path, ts, flush_advance_s, keys)
+    _flush(spark, flush_advance_s, (persons_path, _PERSONS), (auctions_path, _AUCTIONS))
     ps, au = _q8_windowed_sides(
         spark,
         persons_path,
@@ -816,16 +771,10 @@ def run_nexmark_q8_outer_stream(
         au["seller"].alias("seller"),
         F.coalesce(ps["w"]["start"], au["w"]["start"]).alias("starttime"),
     )
-    rows = run_available_now(
-        joined, checkpoint=checkpoint, mode="append", timeout_s=timeout_s
+    df = _drain(
+        joined, checkpoint=checkpoint, out=f"{checkpoint}-out", timeout_s=timeout_s
     )
-    df = spark.createDataFrame(
-        rows, "p_id BIGINT, name STRING, seller BIGINT, starttime TIMESTAMP"
-    ).where(
-        (F.col("p_id").isNull() | (F.col("p_id") >= 0))
-        & (F.col("seller").isNull() | (F.col("seller") >= 0))
-    )
-    return df.distinct()
+    return drop_flush_sentinels(df, ["p_id", "seller"]).distinct()
 
 
 def run_nexmark_q13_stream(
@@ -846,19 +795,12 @@ def run_nexmark_q13_stream(
     retained object is the broadcast table, so this scales with the
     side input's size, not the stream's history.
     """
-    stream = replay_stream(spark, bids_path, files_per_trigger=files_per_trigger)
-    if "epoch" in stream.columns:
-        stream = stream.drop("epoch")
+    stream = _replay(spark, bids_path, files_per_trigger)
     joined = stream.join(
         F.broadcast(side_input), F.expr("MOD(auction, 1000)") == side_input["key"]
     ).select("auction", "bidder", "price", "b_date_time", "value")
-    rows = run_available_now(
-        joined, checkpoint=checkpoint, mode="append", timeout_s=timeout_s
-    )
-    return spark.createDataFrame(
-        rows,
-        "auction BIGINT, bidder BIGINT, price BIGINT, "
-        "b_date_time TIMESTAMP_NTZ, value STRING",
+    return _drain(
+        joined, checkpoint=checkpoint, out=f"{checkpoint}-out", timeout_s=timeout_s
     )
 
 
@@ -890,22 +832,15 @@ def run_nexmark_q3_stream(
     state is the honest cost of q3's semantics — on a cluster, back it
     with the RocksDB state store (session.configure_state_store).
     """
-    ps = replay_stream(spark, persons_path, files_per_trigger=files_per_trigger)
-    au = replay_stream(spark, auctions_path, files_per_trigger=files_per_trigger)
-    if "epoch" in ps.columns:
-        ps = ps.drop("epoch")
-    if "epoch" in au.columns:
-        au = au.drop("epoch")
+    ps = _replay(spark, persons_path, files_per_trigger)
+    au = _replay(spark, auctions_path, files_per_trigger)
     ps = ps.where(F.col("state").isin("OR", "ID", "CA"))
     au = au.where(F.col("category") == 10)
     joined = au.join(ps, au["seller"] == ps["p_id"]).select(
         "name", "city", "state", "a_id"
     )
-    rows = run_available_now(
-        joined, checkpoint=checkpoint, mode="append", timeout_s=timeout_s
-    )
-    return spark.createDataFrame(
-        rows, "name STRING, city STRING, state STRING, a_id BIGINT"
+    return _drain(
+        joined, checkpoint=checkpoint, out=f"{checkpoint}-out", timeout_s=timeout_s
     )
 
 
@@ -938,8 +873,15 @@ def write_flush_epoch(
     that is overwritten, not appended, on re-use, and its time comes from
     the real epochs only. A call that finds that same sentinel already in
     place — one row, same time and keys, written after every data file so
-    the replay still reads it last — writes nothing.
+    the replay still reads it last — writes nothing. The dir's Hadoop-FS
+    listing (path, length, modification time of every file) is recorded
+    in the session store after each write or check; a call that finds
+    the listing unchanged starts no Spark job at all.
     """
+    key = ("flush_listing", data_dir, ts_col, advance_s, *neg_keys)
+    seen = catalog.entry(spark, *key)
+    if seen is not None and seen.value == _listing(spark, data_dir):
+        return
     base = spark.read.parquet(data_dir)
     flush = F.col("epoch") == _FLUSH_EPOCH
     mtime = F.col("_metadata.file_modification_time")
@@ -952,22 +894,32 @@ def write_flush_epoch(
     )
     for k in neg_keys:
         same &= F.max(F.when(flush, F.col(k))) == -1
-    if base.agg(same).first()[0]:
-        return
-    latest = base.where(~flush).orderBy(ts.desc()).limit(1)
-    sentinel = latest.withColumn(ts_col, shifted).withColumn(
-        "epoch", F.lit(_FLUSH_EPOCH).cast("long")
-    )
-    for c in neg_keys:
-        sentinel = sentinel.withColumn(
-            c, F.lit(-1).cast(dict(latest.dtypes)[c])
+    if not base.agg(same).first()[0]:
+        latest = base.where(~flush).orderBy(ts.desc()).limit(1)
+        sentinel = latest.withColumn(ts_col, shifted).withColumn(
+            "epoch", F.lit(_FLUSH_EPOCH).cast("long")
         )
-    (
-        sentinel.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch")
-        .parquet(data_dir)
-    )
+        for c in neg_keys:
+            sentinel = sentinel.withColumn(c, F.lit(-1).cast(dict(latest.dtypes)[c]))
+        (
+            sentinel.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("epoch")
+            .parquet(data_dir)
+        )
+    catalog.store(spark, key, _listing(spark, data_dir))
+
+
+def _listing(spark: SparkSession, path: str) -> tuple:
+    """(path, length, modification time) of every file under ``path``,
+    read through Hadoop FS — no Spark job."""
+    fs, p = _hadoop_path(spark, path)
+    files = []
+    it = fs.listFiles(p, True)
+    while it.hasNext():
+        st = it.next()
+        files.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    return tuple(sorted(files))
 
 
 def write_keyed_flush_epoch(
@@ -1020,25 +972,19 @@ def run_nexmark_q12_proc_stream(
     contract is the partition invariant: per-key window counts sum to
     the per-key input count — the degenerate lane's q12 cells pin
     exactly that."""
-    stream = replay_stream(spark, bids_path, files_per_trigger=files_per_trigger)
-    if "epoch" in stream.columns:
-        stream = stream.drop("epoch")
+    stream = _replay(spark, bids_path, files_per_trigger)
     res = stateful_proc_window_count_legacy(
         stream, "bidder", window_s=window_s
     ).select(
         F.col("key").cast("long").alias("key"), "win_start_ms", "n"
     )
-    out = result_path or f"{checkpoint}-out"
-    _drain_to_parquet_sink(
+    return _drain(
         res,
         checkpoint=checkpoint,
-        path=out,
+        out=result_path or f"{checkpoint}-out",
         timeout_s=timeout_s,
         metrics=metrics,
         crash_after_s=crash_after_s,
-    )
-    return _read_result_sink(
-        spark, out, "key BIGINT, win_start_ms BIGINT, n BIGINT"
     )
 
 
@@ -1058,12 +1004,8 @@ def _winning_bid_join(
     ``b_date_time <= expires`` residual riding the same join (the
     generator caps auction duration under ``max_dur_s``, so the interval
     bound is a superset and drops nothing)."""
-    bi = replay_stream(spark, bids_path, files_per_trigger=files_per_trigger)
-    au = replay_stream(spark, auctions_path, files_per_trigger=files_per_trigger)
-    if "epoch" in bi.columns:
-        bi = bi.drop("epoch")
-    if "epoch" in au.columns:
-        au = au.drop("epoch")
+    bi = _replay(spark, bids_path, files_per_trigger)
+    au = _replay(spark, auctions_path, files_per_trigger)
     bi = _with_event_time(bi, "b_date_time").withWatermark("b_date_time", delay)
     au = (
         _with_event_time(au, "a_date_time")
@@ -1188,45 +1130,56 @@ def run_nexmark_q4_stream(
     per-store state at bench scale under 500 rows. At 100 TB the same
     knob turns the other way: size it so each store's state fits its
     executor share."""
-    for path, ts, keys in (
-        (bids_path, "b_date_time", ["auction", "bidder"]),
-        (auctions_path, "a_date_time", ["a_id", "seller"]),
-    ):
-        write_flush_epoch(spark, path, ts, flush_advance_s, keys)
+    _flush(spark, flush_advance_s, (bids_path, _BIDS), (auctions_path, _AUCTIONS))
     shuffle_key = "spark.sql.shuffle.partitions"
     prev_parts = spark.conf.get(shuffle_key)
     if state_partitions is not None:
         spark.conf.set(shuffle_key, str(state_partitions))
     try:
-        partials = nexmark_q4_stream(
-            spark,
-            bids_path,
-            auctions_path,
-            window_s=window_s,
-            max_dur_s=max_dur_s,
-            delay=delay,
-            files_per_trigger=files_per_trigger,
-        )
-        rows = run_available_now(
-            partials,
+        partials = _drain(
+            nexmark_q4_stream(
+                spark,
+                bids_path,
+                auctions_path,
+                window_s=window_s,
+                max_dur_s=max_dur_s,
+                delay=delay,
+                files_per_trigger=files_per_trigger,
+            ),
             checkpoint=checkpoint,
-            mode="append",
+            out=f"{checkpoint}-out",
             timeout_s=timeout_s,
             metrics=metrics,
         )
     finally:
         if state_partitions is not None:
             spark.conf.set(shuffle_key, prev_parts)
-    schema = (
-        "win_start TIMESTAMP, category INT, sum_final BIGINT, n_auctions BIGINT"
+    return partials.groupBy("category").agg(
+        (F.sum("sum_final").cast("double") / F.sum("n_auctions")).alias("avg_final")
     )
+
+
+def _best_bid(joined: DataFrame, window_s: int, *keys: str) -> DataFrame:
+    """The winning bid per auction window and ``keys``: ONE windowed
+    ``MAX(struct(...))`` argmax whose struct encodes the batch q9's tie
+    order — price DESC, then b_date_time ASC, then bidder ASC
+    (queries/q9.sql:13) — as (price, -unix_micros(ts), -bidder). Emits
+    ``keys`` + price, bid_us (the bid time in epoch µs) and bidder."""
+    best = F.max(
+        F.struct(
+            F.col("price"),
+            (-F.unix_micros("b_date_time")).alias("neg_ts"),
+            (-F.col("bidder")).alias("neg_bidder"),
+        )
+    ).alias("best")
     return (
-        spark.createDataFrame(rows, schema)
-        .groupBy("category")
-        .agg(
-            (
-                F.sum("sum_final").cast("double") / F.sum("n_auctions")
-            ).alias("avg_final")
+        joined.groupBy(F.window("a_date_time", f"{window_s} seconds"), *keys)
+        .agg(best)
+        .select(
+            *keys,
+            F.col("best.price").alias("price"),
+            (-F.col("best.neg_ts")).alias("bid_us"),
+            (-F.col("best.neg_bidder")).alias("bidder"),
         )
     )
 
@@ -1243,13 +1196,11 @@ def nexmark_q9_stream(
 ) -> DataFrame:
     """NEXMark q9 (the winning BID row per auction) as an incremental
     append pipeline: the winning-bid interval join followed by ONE
-    windowed ``MAX(struct(...))`` argmax per auction.
+    windowed ``MAX(struct(...))`` argmax per auction (_best_bid).
 
-    The struct encodes the batch q9's exact tie order — price DESC, then
-    b_date_time ASC, then bidder ASC (queries/q9.sql:13) — as
-    (price, -unix_micros(ts), -bidder), so the struct MAX picks the
-    identical winner the ROW_NUMBER formulation ranks first, and the
-    whole query needs no per-epoch re-rank: per-auction state is one
+    The struct MAX picks the identical winner the batch ROW_NUMBER
+    formulation ranks first, so the whole query needs no per-epoch
+    re-rank: per-auction state is one
     struct, finalized and evicted when the watermark passes the
     auction's window. Like the batch q9, only NARROW columns flow
     through the stateful stage; wide auction attributes join back onto
@@ -1264,22 +1215,11 @@ def nexmark_q9_stream(
         delay=delay,
         files_per_trigger=files_per_trigger,
     )
-    best = F.max(
-        F.struct(
-            F.col("price"),
-            (-F.unix_micros("b_date_time")).alias("neg_ts"),
-            (-F.col("bidder")).alias("neg_bidder"),
-        )
-    ).alias("best")
-    return (
-        joined.groupBy(F.window("a_date_time", f"{window_s} seconds"), "a_id")
-        .agg(best)
-        .select(
-            "a_id",
-            F.col("best.price").alias("price"),
-            F.timestamp_micros(-F.col("best.neg_ts")).alias("bid_date_time"),
-            (-F.col("best.neg_bidder")).alias("bidder"),
-        )
+    return _best_bid(joined, window_s, "a_id").select(
+        "a_id",
+        "price",
+        F.timestamp_micros("bid_us").alias("bid_date_time"),
+        "bidder",
     )
 
 
@@ -1300,11 +1240,7 @@ def run_nexmark_q9_stream(
     sentinels close the tail windows) and join the wide auction
     attributes back onto the winners — the same narrow-rank/wide-join
     split the batch q9 plans."""
-    for path, ts, keys in (
-        (bids_path, "b_date_time", ["auction", "bidder"]),
-        (auctions_path, "a_date_time", ["a_id", "seller"]),
-    ):
-        write_flush_epoch(spark, path, ts, flush_advance_s, keys)
+    _flush(spark, flush_advance_s, (bids_path, _BIDS), (auctions_path, _AUCTIONS))
     winners = nexmark_q9_stream(
         spark,
         bids_path,
@@ -1314,11 +1250,8 @@ def run_nexmark_q9_stream(
         delay=delay,
         files_per_trigger=files_per_trigger,
     )
-    rows = run_available_now(
-        winners, checkpoint=checkpoint, mode="append", timeout_s=timeout_s
-    )
-    won = spark.createDataFrame(
-        rows, "a_id BIGINT, price INT, bid_date_time TIMESTAMP, bidder BIGINT"
+    won = _drain(
+        winners, checkpoint=checkpoint, out=f"{checkpoint}-out", timeout_s=timeout_s
     )
     auctions = (
         spark.read.parquet(auctions_path)
@@ -1450,11 +1383,7 @@ def run_nexmark_q6_stream(
     runs; the channel is replayable, so the second query recovers
     independently of the first (two checkpoints, two state stores).
     """
-    for path, ts, keys in (
-        (bids_path, "b_date_time", ["auction", "bidder"]),
-        (auctions_path, "a_date_time", ["a_id", "seller"]),
-    ):
-        write_flush_epoch(spark, path, ts, flush_advance_s, keys)
+    _flush(spark, flush_advance_s, (bids_path, _BIDS), (auctions_path, _AUCTIONS))
     joined = _winning_bid_join(
         spark,
         bids_path,
@@ -1463,59 +1392,25 @@ def run_nexmark_q6_stream(
         delay=delay,
         files_per_trigger=files_per_trigger,
     )
-    best = F.max(
-        F.struct(
-            F.col("price"),
-            (-F.unix_micros("b_date_time")).alias("neg_ts"),
-            (-F.col("bidder")).alias("neg_bidder"),
-        )
-    ).alias("best")
-    winners = (
-        joined.groupBy(
-            F.window("a_date_time", f"{window_s} seconds"), "a_id", "seller"
-        )
-        .agg(best)
-        .select(
-            "a_id",
-            "seller",
-            F.col("best.price").alias("final"),
-            (-F.col("best.neg_ts")).alias("win_ts_us"),
-        )
-    )
-    qa = (
-        winners.writeStream.format("parquet")
-        .option("path", winners_path)
-        .option("checkpointLocation", checkpoint + "-winners")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not qa.awaitTermination(timeout_s):
-        qa.stop()
-        raise TimeoutError("q6 winners stage still running")
-
-    # Hadoop-FS listing, not os.listdir: winners_path may live on any
-    # scheme (the _mor_log_dirs pattern); local paths resolve identically
-    jvm = spark._jvm
-    wpath = jvm.org.apache.hadoop.fs.Path(winners_path)
-    wfs = wpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    has_winner_files = wfs.exists(wpath) and any(
-        st.getPath().getName().endswith(".parquet")
-        for st in wfs.listStatus(wpath)
-        if not st.getPath().getName().startswith(("_", "."))
-    )
-    if not has_winner_files:
-        return spark.createDataFrame(
-            [], "seller BIGINT, avg_last10 DOUBLE, n_in_frame BIGINT"
-        )
-    wstream = replay_stream(spark, winners_path, files_per_trigger=files_per_trigger)
-    result = stateful_last_n_avg(wstream, "seller", "final", "win_ts_us", "a_id", n=11)
-    rows = run_available_now(
-        result, checkpoint=checkpoint + "-frame", mode="update", timeout_s=timeout_s
+    winners = _best_bid(joined, window_s, "a_id", "seller").drop("bidder")
+    _drain(
+        winners,
+        checkpoint=f"{checkpoint}-winners",
+        out=winners_path,
+        timeout_s=timeout_s,
     )
     finals: dict = {}
-    for r in rows:  # update mode re-emits per batch; last emission per key wins
-        finals[r["key"]] = (r["avg_last"], r["n_in_frame"])
+    if _has_parquet_files(spark, winners_path):
+        wstream = _replay(spark, winners_path, files_per_trigger)
+        frame = _drain(
+            stateful_last_n_avg(wstream, "seller", "price", "bid_us", "a_id", n=11),
+            checkpoint=f"{checkpoint}-frame",
+            mode="update",
+            timeout_s=timeout_s,
+        )
+        # update mode re-emits per batch; the last emission per key wins
+        for r in frame.collect():
+            finals[r["key"]] = (r["avg_last"], r["n_in_frame"])
     return spark.createDataFrame(
         [(k, v[0], v[1]) for k, v in finals.items()],
         "seller BIGINT, avg_last10 DOUBLE, n_in_frame BIGINT",
@@ -1552,9 +1447,7 @@ def ysb_campaign_stream(
     the benchmark's 10 s campaign windows): filter ad events to views,
     broadcast-join the static ad→campaign map (stream-static join — the
     side input never shuffles the stream), tumbling count per campaign."""
-    stream = replay_stream(spark, events_path, files_per_trigger=files_per_trigger)
-    if "epoch" in stream.columns:
-        stream = stream.drop("epoch")
+    stream = _replay(spark, events_path, files_per_trigger)
     return (
         _with_event_time(stream, "event_time")
         .where(F.col("event_type") == "view")
@@ -1588,26 +1481,9 @@ def run_available_now(
     (capture_state_metrics) — the stress lanes use it to put numbers on
     every "state is bounded" claim.
     """
-    # full non-alnum sanitize: a '.' (or any other non-identifier char)
-    # in the checkpoint basename would make the final SELECT parse as
-    # db.table and lose the drained result
-    name = "mem_" + re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(checkpoint))
-    q = (
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        # Partial results would make equality tests flaky and leak the query.
-        q.stop()
-        raise TimeoutError(f"stream '{name}' still running after {timeout_s}s")
-    if metrics is not None:
-        metrics.update(capture_state_metrics(q))
-    spark = result.sparkSession
-    return spark.sql(f"SELECT * FROM {name}").collect()
+    return _drain(
+        result, checkpoint=checkpoint, mode=mode, timeout_s=timeout_s, metrics=metrics
+    ).collect()
 
 
 def noop_sink(
@@ -1699,9 +1575,7 @@ def upsert_sink(
         # read errors: a transient read failure must PROPAGATE so the
         # micro-batch retries — swallowing it would silently replace every
         # touched bucket with batch-only contents, losing upserted keys.
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, hpath = _hadoop_path(spark, path)
         if fs.exists(hpath):
             existing = spark.read.parquet(path).where(F.col("_bucket").isin(touched))
             merged = existing.unionByName(b)
@@ -1892,17 +1766,14 @@ def cdc_mor_sink(
 def _mor_log_dirs(spark: SparkSession, table_path: str) -> list[str]:
     """Committed (``_SUCCESS``-marked) delta-log entry dirs, a pure
     filesystem listing — the metadata-log read of a table format."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    log = jvm.org.apache.hadoop.fs.Path(f"{table_path}/log")
-    fs = log.getFileSystem(conf)
+    fs, log = _hadoop_path(spark, f"{table_path}/log")
     if not fs.exists(log):
         return []
     dirs = []
     for st in fs.listStatus(log):
         p = st.getPath()
         if p.getName().startswith("b=") and fs.exists(
-            jvm.org.apache.hadoop.fs.Path(p, "_SUCCESS")
+            spark._jvm.org.apache.hadoop.fs.Path(p, "_SUCCESS")
         ):
             dirs.append(p.toString())
     return sorted(dirs)
@@ -1932,11 +1803,9 @@ def compact_cdc_mor(
     # log dirs its plan read from are deleted below — no lineage
     # truncation needed (nothing re-evaluates the plan afterwards).
     version = maintenance.versioned_write(spark, merged, table_path)
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
     for d in log_dirs:
-        p = jvm.org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(conf).delete(p, True)
+        fs, p = _hadoop_path(spark, d)
+        fs.delete(p, True)
     return version
 
 
@@ -2281,14 +2150,12 @@ def run_interval_overlap_stream(
     state holds ~(watermark + interval) per key at steady state.
     """
     views = (
-        replay_stream(spark, views_path, files_per_trigger)
-        .drop("epoch")
+        _replay(spark, views_path, files_per_trigger)
         .withColumn("v_start", F.col("v_start").cast("timestamp"))
         .withWatermark("v_start", watermark)
     )
     purchases = (
-        replay_stream(spark, purchases_path, files_per_trigger)
-        .drop("epoch")
+        _replay(spark, purchases_path, files_per_trigger)
         .withColumn("p_start", F.col("p_start").cast("timestamp"))
         .withWatermark("p_start", watermark)
     )
@@ -2304,11 +2171,8 @@ def run_interval_overlap_stream(
             <= views["v_start"] + F.expr(f"INTERVAL {view_len_s} SECOND")
         ),
     ).select(views["user_id"], "view_id", "purchase_id")
-    rows = run_available_now(
-        joined, checkpoint=checkpoint, mode="append", timeout_s=timeout_s
-    )
-    return spark.createDataFrame(
-        rows, "user_id BIGINT, view_id BIGINT, purchase_id BIGINT"
+    return _drain(
+        joined, checkpoint=checkpoint, out=f"{checkpoint}-out", timeout_s=timeout_s
     )
 
 

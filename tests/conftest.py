@@ -9,7 +9,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 def spark():
     from squirtle_spark.session import get_spark
 
-    s = get_spark(app_name="squirtle-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    s = get_spark(app_name="squirtle-tests")
     yield s
 
 

@@ -167,16 +167,13 @@ def test_nexmark_q5_full_stream_equals_batch(spark, tmp_path):
     """The DECLARED q5 end-to-end as a stream — hopping counts (stateful)
     + per-window max join-on-aggregate — must equal the identical batch
     computation, ties included (flock's production path streams this query,
-    benchmarks/src/nexmark/main.rs)."""
+    benchmarks/src/nexmark/main.rs). A ``result_path`` given as a URI
+    reads back through Hadoop FS to the same result."""
     bids = sources.nexmark_bids(spark, 200, 12).withColumn(
         "epoch", F.unix_timestamp(F.col("b_date_time").cast("timestamp")) % 100000
     )
     data_dir = str(tmp_path / "bids")
     streaming.write_epoch_files(bids, data_dir)
-
-    got = streaming.run_nexmark_q5_stream(
-        spark, data_dir, checkpoint=str(tmp_path / "ckpt-q5full"), files_per_trigger=3
-    ).collect()
 
     batch = bids.drop("epoch").withColumn(
         "b_date_time", F.col("b_date_time").cast("timestamp")
@@ -191,8 +188,16 @@ def test_nexmark_q5_full_stream_equals_batch(spark, tmp_path):
         .select("auction", "num", F.col("window.start").alias("starttime"))
         .collect()
     )
-    assert len(got) > 0
-    assert sorted(map(tuple, got)) == sorted(map(tuple, expected))
+    for tag, result_path in (("plain", None), ("uri", f"file://{tmp_path}/q5-out")):
+        got = streaming.run_nexmark_q5_stream(
+            spark,
+            data_dir,
+            checkpoint=str(tmp_path / f"ckpt-q5full-{tag}"),
+            files_per_trigger=3,
+            result_path=result_path,
+        ).collect()
+        assert len(got) > 0, tag
+        assert sorted(map(tuple, got)) == sorted(map(tuple, expected)), tag
 
 
 def test_nexmark_q7_full_stream_equals_batch(spark, tmp_path):
@@ -743,11 +748,14 @@ def test_nexmark_q11_full_stream_equals_batch(spark, tmp_path):
     data_dir = str(tmp_path / "bids")
     streaming.write_epoch_files(bids, data_dir)
 
-    got = streaming.run_nexmark_q11_stream(
+    # the flush sentinel lands past gap + delay, so the tail sessions close
+    got = streaming.run_nexmark_q11_append_stream(
         spark,
         data_dir,
         checkpoint=str(tmp_path / "ckpt-q11full"),
         gap_s=3,
+        delay="600 seconds",
+        flush_advance_s=3_600,
         files_per_trigger=3,
     ).collect()
 
@@ -1179,7 +1187,13 @@ def test_q4_stream_recovers_from_checkpoint_mid_replay(spark, tmp_path):
     partials across both runs must fold to the exact batch q4 answer —
     join buffers and both agg state stores recover, nothing double-emits
     (flock's PROCESSED_WINDOWS idempotence, subsumed by checkpoint +
-    sink commit log)."""
+    sink commit log).
+
+    The kill is gated on committed batches, not a wall-clock sleep: it
+    must land while both replays still have files to read. A restart
+    after the 5-file auction replay is exhausted never advances the
+    watermark (the min policy holds an operator that has seen no rows
+    since the restart at 0), so nothing would ever emit."""
     import time as _time
 
     bids = sources.nexmark_bids(spark, 400, 10).withColumn(
@@ -1212,7 +1226,10 @@ def test_q4_stream_recovers_from_checkpoint_mid_replay(spark, tmp_path):
         )
 
     q1 = start()
-    _time.sleep(4)
+    deadline = _time.time() + 300
+    while _time.time() < deadline and len(q1.recentProgress) < 2:
+        _time.sleep(0.05)
+    assert q1.isActive
     q1.stop()  # interrupt mid-replay (uncommitted batch is fine: the sink
     # commit log only exposes committed files to readers)
     q2 = start()
@@ -2005,7 +2022,16 @@ def test_write_flush_epoch_is_idempotent(spark, tmp_path):
 
     streaming.write_flush_epoch(spark, str(data_dir), "b_date_time", 3600, ["auction", "bidder"])
     first, first_files = sentinel()
-    streaming.write_flush_epoch(spark, str(data_dir), "b_date_time", 3600, ["auction", "bidder"])
+    sc = spark.sparkContext
+    sc.setJobGroup("flush-repeat", "repeat write_flush_epoch")
+    try:
+        streaming.write_flush_epoch(
+            spark, str(data_dir), "b_date_time", 3600, ["auction", "bidder"]
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # an unchanged dir listing is checked without a Spark job
+    assert list(sc.statusTracker().getJobIdsForGroup("flush-repeat")) == []
     second, second_files = sentinel()
 
     assert first["b_date_time"] == second["b_date_time"] == hi + dt.timedelta(seconds=3600)
@@ -2043,8 +2069,13 @@ def test_flushed_dir_does_not_contaminate_other_topologies(spark, sf_dir, tmp_pa
     ).collect()
     assert hot and all(r["auction"] >= 0 for r in hot)
 
-    sess = streaming.run_nexmark_q11_stream(
-        spark, str(tmp_path / "bids"), checkpoint=str(tmp_path / "ck11")
+    sess = streaming.run_nexmark_q11_append_stream(
+        spark,
+        str(tmp_path / "bids"),
+        checkpoint=str(tmp_path / "ck11"),
+        gap_s=10,
+        delay="600 seconds",
+        flush_advance_s=3_600,
     ).collect()
     assert sess and all(r["bidder"] >= 0 for r in sess)
 
@@ -2063,7 +2094,19 @@ def test_q5_q7_runners_never_collect_and_state_evicts(spark, tmp_path):
     unlike the old complete-mode forms whose state only ever grew."""
     import inspect
 
-    for fn in (streaming.run_nexmark_q5_stream, streaming.run_nexmark_q7_stream):
+    for fn in (
+        streaming.run_nexmark_q3_stream,
+        streaming.run_nexmark_q4_stream,
+        streaming.run_nexmark_q5_stream,
+        streaming.run_nexmark_q7_stream,
+        streaming.run_nexmark_q8_stream,
+        streaming.run_nexmark_q8_outer_stream,
+        streaming.run_nexmark_q9_stream,
+        streaming.run_nexmark_q11_append_stream,
+        streaming.run_nexmark_q12_proc_stream,
+        streaming.run_nexmark_q13_stream,
+        streaming.run_interval_overlap_stream,
+    ):
         assert ".collect()" not in inspect.getsource(fn), fn.__name__
 
     bids = sources.nexmark_bids(spark, 200, 12).withColumn(
