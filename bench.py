@@ -2,40 +2,36 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
 Prints ONE JSON line (kept under ~2,000 chars — the driver captures a
-bounded tail of stdout, and round 7's full per-query canary stamps
-pushed the line to ~5 KB, leaving BENCH_r07.json unparseable):
+bounded tail of stdout):
   {"metric": "headline_total_sec", "value": N, "unit": "sec",
    "queries": {name: sec, ...}, "sf": 0.1, "canary": {summary},
    "streaming": {ev/s one-liner}, "drift": {summary},
-   "detail": "BENCH_DETAIL_r{N}.json"}
+   "host_settled": bool, "detail": "BENCH_DETAIL_r{N}.json"}
 
-The FULL record — per-query canary stamps, normalized plan
-fingerprints, and drift attribution vs the previous recorded round —
-goes to ``BENCH_DETAIL_r{N}.json`` next to this file. Any per-query
-delta beyond DRIFT_TOLERANCE vs the previous round is re-timed
-(best-of-2 measurement windows) and classified with evidence:
-``noise`` (plan fingerprint unchanged and/or the retime reverts),
-``plan-change`` (fingerprint differs), or ``regressed-same-plan``
-(same plan, delta survives the retime — a real regression to chase).
+The FULL record — per-query canary stamps, plan fingerprints, stream
+lane samples and drift rows vs the prior record — goes to
+``BENCH_DETAIL_r{N}.json`` next to this file. Drift is attributed
+against ONE prior record (the newest same-sf BENCH_DETAIL of an earlier
+round) by ONE classifier, :func:`_classify_drift`, which query rows and
+stream-lane rows share. A query beyond DRIFT_TOLERANCE of its prior wall
+is re-timed once before it is classed.
 
 Execution is measured with the noop sink (full pipeline runs, nothing
 crosses back to the driver) — the same shape as the reference's blackhole
 sink benchmarks (flock/src/datasink/mod.rs:47-72, README.md:186-195).
 
-Noise defense (the round-4 artifact was contaminated by a sustained host
-stall that min-of-3 could not survive): a fixed CANARY — one full-scan
-hash-agg over `events`, constant work independent of the query under
-test — is calibrated at startup and re-timed around every measured run.
-If any canary sample in a query's measurement window exceeds
-CANARY_FACTOR x calibration, the whole measurement is discarded and the
-query re-run (bounded retries). The emitted JSON carries the canary
-calibration, p50/max of all samples, and the rerun count, so a
-contaminated run is self-identifying instead of silently wrong.
+Noise defense: a fixed CANARY — one full-scan hash-agg over `events`,
+constant work independent of the query under test — is calibrated at
+startup and re-timed around every measured run. If any canary sample in
+a query's measurement window exceeds CANARY_FACTOR x calibration, the
+whole measurement is discarded and the query re-run (bounded retries).
+The emitted JSON carries the canary calibration, max sample and rerun
+count, so a contaminated run is self-identifying instead of silently
+wrong.
 
-`--stress` runs the 10x-rate streaming stress (q5 full pipeline, q11
-session store, q8 stream-stream join, q4 chained three-stateful
-pipeline) and prints its own JSON line — the machine-readable form of
-SCALING.md's headroom claim.
+The 10x-rate streaming/CDC/ANN stress lives in ``tools/stress_bench.py``
+(run ``python tools/stress_bench.py``); it reuses this module's canary,
+lane sampler and drift classifier.
 """
 
 from __future__ import annotations
@@ -48,7 +44,7 @@ import time
 
 CANARY_FACTOR = 3.0  # a canary sample beyond this x calibration voids the window
 MAX_RERUNS_PER_QUERY = 2
-DRIFT_TOLERANCE = 0.20  # per-query delta vs previous round that triggers a retime
+DRIFT_TOLERANCE = 0.20  # delta vs the prior record that earns a drift row
 
 
 def _round_number() -> int:
@@ -101,33 +97,16 @@ def _rounds_glob(pattern: str) -> list[tuple[int, str]]:
     return sorted(out)
 
 
-def _prev_record(sf: float) -> tuple[int, dict, dict, dict, dict, int]:
-    """(round, {name: sec}, {name: plan_fp}, {name: index_fp},
-    {name: prior regressed-class}, fingerprint version of the prior
-    record or 0 if incomparable) of the newest usable PRIOR-round
-    record AT THE SAME SCALE FACTOR.
+def _prev_record(sf: float) -> tuple[int, dict]:
+    """(round, record) of the drift baseline: the newest
+    ``BENCH_DETAIL_r*.json`` of an EARLIER round at the SAME scale
+    factor, or (0, {}) when none exists. Read once per run; query drift,
+    stream-lane drift and the canary ratio all come from this record.
 
-    The last element is the drift WATCHLIST: queries the prior round
-    classed ``regressed-*`` get a drift row THIS round even when their
-    delta sits inside DRIFT_TOLERANCE, so an open regression is always
-    explicitly adjudicated (same-plan noise / improved / plan-change)
-    rather than silently dropping out of the drift section the moment
-    the number recovers (VERDICT r10 item 1).
-
-    Prefers BENCH_DETAIL_r*.json (carries fingerprints); falls back to
-    the newest BENCH_r*.json whose driver-side ``parsed`` is non-null
-    (fingerprints empty there — drift then classifies by retime alone).
-    Fingerprints recorded under a DIFFERENT FINGERPRINT_VERSION are
-    dropped (times kept): v1/v2 hashes of one identical plan differ, so
-    comparing across versions would stamp "plan-change" on every
-    drifted query the round after a fingerprint-algorithm fix.
-    Records at a different sf are skipped: comparing sf0.01 seconds
-    against an sf0.1 run would flag every query as drifted and poison
-    every classification (a stray local run at another sf must not
-    become the baseline). Records whose round >= the current round are
-    skipped too — bench writes its own detail file before the driver
-    stamps BENCH_r{N}, so a second run in the same round would otherwise
-    silently use its own earlier run as the drift baseline (ADVICE r8)."""
+    Other scale factors are skipped (sf0.01 seconds against an sf0.1 run
+    would flag every query), and so is the current round's own record —
+    bench writes its detail file before BENCH_r{N} is stamped, so
+    a second run in the same round would otherwise be its own baseline."""
     cur = _round_number()
     for rnd, f in reversed(_rounds_glob("BENCH_DETAIL_r*.json")):
         if rnd >= cur:
@@ -136,124 +115,46 @@ def _prev_record(sf: float) -> tuple[int, dict, dict, dict, dict, int]:
             d = json.load(open(f))
         except (json.JSONDecodeError, OSError):
             continue
-        if d.get("sf") == sf and d.get("queries"):
-            prev_ver = d.get("fingerprint_version", 1)
-            # v4 dual-records v2 and v3(legacy) maps, so a prev v2 or
-            # v3 record stays comparable against the same-version map —
-            # no blind window like the v1→v2 switch; v1 records stay
-            # incomparable.
-            comparable = prev_ver in (2, 3, FINGERPRINT_VERSION)
-            watch = {
-                n: row["class"]
-                for n, row in d.get("drift", {}).items()
-                if str(row.get("class", "")).startswith("regressed")
-            }
-            return (
-                rnd,
-                d["queries"],
-                d.get("plan_fingerprints", {}) if comparable else {},
-                d.get("index_fingerprints", {}) if comparable else {},
-                watch,
-                prev_ver if comparable else 0,
-            )
-    for rnd, f in reversed(_rounds_glob("BENCH_r*.json")):
-        if rnd >= cur:
-            continue
-        try:
-            d = json.load(open(f))
-        except (json.JSONDecodeError, OSError):
-            continue
-        parsed = d.get("parsed")
-        if parsed and parsed.get("queries") and parsed.get("sf") == sf:
-            return rnd, parsed["queries"], {}, {}, {}, 0
-    return 0, {}, {}, {}, {}, 0
+        if d.get("sf") == sf:
+            return rnd, d
+    return 0, {}
 
 
-#: Fingerprint algorithm version. Bumped to 2 when plan rendering was
-#: switched to untruncated metadata (below); bumped to 3 when
-#: multi-COUNT(DISTINCT) grouping-id slots were canonicalized; bumped
-#: to 4 when v3's trailing-newline drop was fixed (ADVICE r11: v3
-#: joined canonicalized lines with "\n", losing the plan's final
-#: newline, so v3 != v2 even for gid-FREE plans — which made the
-#: ``fingerprint_v2_gid_artifact`` gate, defined as v3 != v2, vacuously
-#: true for every query and would have laundered any genuine
-#: plan-change vs a v2-era record into the artifact class). v4 rewrites
-#: only gid-bearing lines in place, byte-preserving every line ending,
-#: so a gid-free plan's v4 IS its v2. Hashes from different versions
-#: are NOT comparable for plans the changed normalization touches, so
-#: drift compares same-version maps: older maps are dual-recorded
-#: (``plan_fingerprints_v2`` / ``plan_fingerprints_v3``) so neither the
-#: v2→v3 nor the v3→v4 switch has a blind window (a prev-round v2/v3
-#: record compares against this round's same-version map), unlike the
-#: v1→v2 switch which blinded one round.
+#: Version of :func:`_plan_fingerprint`'s normalization. A prior record
+#: written under another version has incomparable hashes, so its plan
+#: evidence is ignored (times are still compared).
 FINGERPRINT_VERSION = 4
 
 
-def _canary_p50_ratio(canary: "Canary", sf: float) -> float | None:
-    """This run's canary p50 over the drift baseline record's canary p50
-    (same prior-record selection rule as _prev_record: newest same-sf
-    BENCH_DETAIL of an earlier round), or None when no prior record
-    carries a canary p50. See the stamp's comment at the call site."""
-    cur = _round_number()
+def _canary_p50_ratio(canary: "Canary", prev: dict) -> float | None:
+    """This run's canary p50 over the prior record's, or None when either
+    is missing. A ratio well above 1 alongside uniform same-plan slowdowns
+    reads as host throughput degradation that /proc/loadavg cannot see
+    (thermal, steal) — data for the reader, not an auto-acquittal."""
     p50 = canary.stats(0).get("p50_sec")
-    if not p50:
-        return None
-    for rnd, f in reversed(_rounds_glob("BENCH_DETAIL_r*.json")):
-        if rnd >= cur:
-            continue
-        try:
-            d = json.load(open(f))
-        except (json.JSONDecodeError, OSError):
-            continue
-        if d.get("sf") == sf and d.get("canary", {}).get("p50_sec"):
-            return round(p50 / d["canary"]["p50_sec"], 3)
-    return None
+    prev_p50 = prev.get("canary", {}).get("p50_sec")
+    return round(p50 / prev_p50, 3) if p50 and prev_p50 else None
 
 
-def _plan_fingerprint(df) -> dict:
-    """Stable hashes of the physical plan, ephemeral ids stripped —
-    returns ``{"v2", "v3", "v4", "has_gid"}`` (v4 is the canonical
-    fingerprint; v2/v3 are kept for comparing against records written
-    under those versions, ``has_gid`` says whether the gid
-    canonicalization touched this plan at all).
+def _plan_fingerprint(df) -> str:
+    """Stable 12-hex hash of the physical plan, ephemeral ids stripped.
 
-    Two rounds with the same fingerprint ran the same plan shape, so a
-    wall-clock swing between them is host noise (or data change — the
-    bench corpus is fixed), not a regression introduced by a code edit.
-    Normalization removes expression ids (``#123``), plan/exchange ids
-    (``[id=#45]``, ``[plan_id=67]``) and absolute temp paths, which
-    differ run-to-run with identical plans.
+    Two runs with the same fingerprint ran the same plan shape, so a
+    wall-clock swing between them is host noise, not a code change (the
+    bench corpus is fixed). Normalization:
 
-    Rendered with ``spark.sql.maxMetadataStringLength`` raised so no
-    field truncates (v2): the default 100-char truncation cuts
-    ``DataFilters: [...]`` at a byte offset that depends on the WIDTH of
-    the expression ids inside — ids grow with session age, so the same
-    plan fingerprinted after a matview-heavy run hashed differently than
-    fresh (r9's nexmark_q9 "plan-change" was exactly this artifact: the
-    r8/r9 plans were reproduced identical once untruncated).
-
-    v3/v4 additionally canonicalize multi-COUNT(DISTINCT) plans: Spark
-    assigns the Expand ``gid`` slots (and with them the grouping-key /
-    Expand-branch / FILTER-predicate order) from an unordered collection
-    whose iteration order moves with session state, so the SAME plan
-    renders with permuted gid numbering run-to-run (r11: dq_profile and
-    interval_overlap_join "plan-changes" were reproduced as pure
-    permutations in one session). On lines containing ``gid#`` the gid
-    numerals are blanked and the line is hashed as its sorted multiset
-    of bracket/comma-delimited tokens (commas alone are not enough: the
-    first element of every bracketed list glues to its prefix, e.g.
-    ``HashAggregate(keys=[X``, so WHICH key is first still leaked
-    through) — permutation-invariant, while any real change (different
-    aggregate, extra exchange, different keys) still changes the token
-    multiset or the surrounding lines.
-
-    v3 (RETIRED convention, recorded only for comparing against v3-era
-    records) joined the canonicalized lines with "\\n", dropping the
-    plan's trailing newline — so every plan, gid-free or not, hashed
-    differently from v2 (ADVICE r11). v4 rewrites gid lines in place
-    and byte-preserves all line endings: ``v4 == v2`` exactly when the
-    plan has no gid lines, which is the invariant the gid-artifact
-    gating needs."""
+    - expression ids (``#123``), plan/exchange ids (``[id=#45]``,
+      ``[plan_id=67]``) and absolute temp paths are blanked;
+    - the plan renders with ``spark.sql.maxMetadataStringLength`` raised:
+      the default 100-char truncation cuts ``DataFilters: [...]`` at an
+      offset that moves with the WIDTH of the expression ids, which grow
+      with session age;
+    - lines holding a multi-COUNT(DISTINCT) Expand ``gid#`` are hashed as
+      the sorted multiset of their bracket/comma-delimited tokens, gid
+      numerals blanked: Spark assigns the gid slots (and the key/branch
+      order that follows them) from an unordered collection, so the same
+      plan renders permuted as session state moves. Every other line,
+      and every line ending, is hashed byte-for-byte."""
     import hashlib
 
     spark = df.sparkSession
@@ -267,25 +168,18 @@ def _plan_fingerprint(df) -> dict:
     plan = re.sub(r"#\d+", "#", plan)
     plan = re.sub(r"\[(?:plan_)?id=#?\d+\]", "[id=]", plan)
     plan = re.sub(r"file:[^\s,\]]+|/tmp/[^\s,\]]+", "<path>", plan)
-    v2 = hashlib.sha1(plan.encode()).hexdigest()[:12]
 
     def canon(line: str) -> str:
         line = re.sub(r"gid# = \d+", "gid# = _", line)
         toks = [t.strip() for t in re.split(r"[,\[\]()]", line)]
         return ", ".join(sorted(t for t in toks if t))
 
-    legacy_lines = []  # v3: "\n"-joined, trailing newline lost
-    v4_parts = []  # v4: line endings preserved byte-for-byte
+    parts = []
     for raw in plan.splitlines(keepends=True):
         body = raw.rstrip("\r\n")
         ending = raw[len(body):]
-        if "gid#" in body:
-            body = canon(body)
-        legacy_lines.append(body)
-        v4_parts.append(body + ending)
-    v3 = hashlib.sha1("\n".join(legacy_lines).encode()).hexdigest()[:12]
-    v4 = hashlib.sha1("".join(v4_parts).encode()).hexdigest()[:12]
-    return {"v2": v2, "v3": v3, "v4": v4, "has_gid": "gid#" in plan}
+        parts.append((canon(body) if "gid#" in body else body) + ending)
+    return hashlib.sha1("".join(parts).encode()).hexdigest()[:12]
 
 
 def _pctl(sorted_vals: list[float], p: float) -> float:
@@ -491,12 +385,345 @@ def _settled_verdict(load_start: dict | None) -> bool | None:
     return bool(load_start["settled"])
 
 
-def main() -> None:
+#: Noise floor multiplier on a lane's canary-window relative spread: the
+#: canary is a short fixed-cost probe, so its relative jitter upper-
+#: bounds a long lane wall's (walls integrate noise); 2x adds margin for
+#: the probe under-sampling a bursty window. The lane's own 2-3 samples
+#: are too thin a ruler to judge a cross-round delta by.
+CANARY_NOISE_MULT = 2.0
+
+#: Hard ceiling on the canary-derived noise floor. On a loaded host the
+#: raw floor reaches hundreds of percent, under which ANY regression
+#: would read as "noise". Above the cap the window is too dirty to
+#: certify anything, and the row says "unmeasurable" instead.
+CANARY_FLOOR_CAP = 0.50
+
+
+def _capped_canary_floor(stats: dict) -> tuple[float | None, bool]:
+    """(floor, usable) — the canary noise floor, capped at CANARY_FLOOR_CAP.
+
+    usable=False means the raw floor exceeded the cap: this window's host
+    evidence is too noisy to adjudicate drift at all."""
+    if "canary_rel_spread" not in stats:
+        return None, True
+    raw = CANARY_NOISE_MULT * stats["canary_rel_spread"]
+    return min(raw, CANARY_FLOOR_CAP), raw <= CANARY_FLOOR_CAP
+
+
+def _watch(prior_row: dict | None) -> dict | None:
+    """The watch rule: {class, round, wall_sec} when the prior record's
+    drift row for this name left a debt, else None.
+
+    A row the prior record classed ``regressed-*``, or ``noise`` /
+    ``unmeasurable`` on a slowdown beyond DRIFT_TOLERANCE, gets a FORCED
+    row this run even inside tolerance: the prior run recorded its slow
+    wall as the next baseline, so without the watch a real regression
+    would vanish from drift the run after it was excused. ``wall_sec``
+    is the baseline from before the debt (carried across renewals)."""
+    if not prior_row:
+        return None
+    cls = str(prior_row.get("class", ""))
+    slow = max(
+        prior_row.get("delta_pct") or 0, prior_row.get("baseline_delta_pct") or 0
+    ) > 100 * DRIFT_TOLERANCE
+    excused = cls == "unmeasurable" or (
+        cls.startswith("noise") and cls != "noise-reverted"
+    )
+    if not (cls.startswith("regressed") or (excused and slow)):
+        return None
+    # query rows written before lanes and queries shared one row shape
+    # named the prior wall ``prev_sec``
+    base = prior_row.get(
+        "baseline_wall_sec", prior_row.get("prev_wall_sec", prior_row.get("prev_sec"))
+    )
+    if not base:
+        return None
+    rnd = prior_row.get("baseline_round", prior_row.get("prev_round"))
+    return {"class": cls, "round": rnd, "wall_sec": base}
+
+
+def _classify_drift(
+    prev_sec: float,
+    stats: dict,
+    same_plan: bool | None = None,
+    same_index: bool | None = None,
+    watch: dict | None = None,
+) -> dict:
+    """The one drift classifier, for query rows and stream-lane rows.
+
+    ``stats`` is this run's sample record: ``min_sec`` (the recorded
+    wall), ``max_sec``, ``samples_sec``, ``dirty`` (the kept window's
+    canary was hot) and, for lanes, ``canary_rel_spread``. ``same_plan``
+    / ``same_index`` are the plan- and index-fingerprint evidence (None
+    when there is none, as for lanes); ``watch`` is :func:`_watch`'s
+    verdict on the prior record's row. Classes, first match wins:
+
+    - ``plan-change``: the plan fingerprint differs from the prior one;
+    - inside tolerance: ``noise`` when unwatched (a query retime that
+      reverted), else judged against the watch baseline —
+      ``noise-reverted`` (back at the baseline, debt closed),
+      ``unmeasurable`` (raw canary floor beyond the cap), ``noise-
+      sustained`` (still elevated but the canary is hot/jittery too) or
+      ``regressed-vs-baseline`` (still elevated on a quiet canary);
+    - beyond tolerance: ``noise`` (hot canary window; prior wall inside
+      this run's sample range; delta within the canary noise floor, or
+      within the sample spread when no canary window was recorded),
+      ``unmeasurable`` (raw floor beyond the cap, delta beyond the capped
+      floor),
+      ``improved``, ``environment`` (same plan AND same index content on
+      a clean window: no code-side input left to blame),
+      ``regressed-same-plan``, or ``regressed`` (no plan evidence)."""
+    now = stats["min_sec"]
+    delta = (now - prev_sec) / prev_sec
+    spread = (stats["max_sec"] - now) / max(now, 1e-9)
+    floor, usable = _capped_canary_floor(stats)
+    too_noisy = (
+        None
+        if usable
+        else f"canary window rel spread {100 * stats['canary_rel_spread']:.0f}% "
+        f"puts the raw noise floor above the {100 * CANARY_FLOOR_CAP:.0f}% cap"
+    )
+    row = {
+        "prev_wall_sec": prev_sec,
+        "wall_sec": now,
+        "samples_sec": stats["samples_sec"],
+        "delta_pct": round(100 * delta, 1),
+        "canary_noise_floor_pct": None if floor is None else round(100 * floor, 1),
+    }
+    if watch:
+        base = watch["wall_sec"]
+        bdelta = (now - base) / base
+        row.update(
+            watch_prior_class=watch["class"],
+            baseline_round=watch["round"],
+            baseline_wall_sec=base,
+            baseline_delta_pct=round(100 * bdelta, 1),
+        )
+    if same_plan is False:
+        cls, why = "plan-change", "plan fingerprint differs from the prior record's"
+    elif abs(delta) <= DRIFT_TOLERANCE and not watch:
+        cls, why = "noise", "retime back within tolerance of the prior record"
+    elif abs(delta) <= DRIFT_TOLERANCE:
+        if abs(bdelta) <= DRIFT_TOLERANCE or bdelta < 0:
+            cls, why = "noise-reverted", (
+                "prior verdict confirmed: wall back at the pre-debt baseline"
+            )
+        elif too_noisy:
+            cls, why = "unmeasurable", (
+                f"{too_noisy} — host too noisy to adjudicate the baseline "
+                "delta; watch renews, re-record on an idle host"
+            )
+        elif stats["dirty"] or (floor is not None and floor >= abs(bdelta)):
+            cls, why = "noise-sustained", (
+                "still elevated vs the pre-debt baseline but this window's "
+                "canary is hot/jittery too — watch renews"
+            )
+        else:
+            cls, why = "regressed-vs-baseline", (
+                "elevated vs the pre-debt baseline on a QUIET canary: the "
+                "prior verdict excused a real regression"
+            )
+    elif stats["dirty"]:
+        cls, why = "noise", "canary-hot measurement window"
+    elif stats["min_sec"] <= prev_sec <= stats["max_sec"]:
+        cls, why = "noise", "previous value inside this run's sample range"
+    elif too_noisy and abs(delta) > floor:
+        cls, why = "unmeasurable", (
+            f"{too_noisy} — host too noisy to adjudicate a "
+            f"{100 * abs(delta):.0f}% delta; re-record on an idle host"
+        )
+    elif floor is not None and floor >= abs(delta):
+        cls, why = "noise", (
+            f"canary noise floor {100 * floor:.0f}% ({CANARY_NOISE_MULT}x "
+            f"window rel spread {100 * stats['canary_rel_spread']:.0f}%"
+            f"{', capped' if too_noisy else ''}) >= cross-round delta "
+            f"{100 * abs(delta):.0f}%"
+        )
+    elif floor is None and spread >= abs(delta):
+        cls, why = "noise", (
+            f"sample spread {100 * spread:.0f}% >= cross-round delta "
+            f"{100 * abs(delta):.0f}% (spread rule: no canary window recorded)"
+        )
+    elif delta < 0:
+        cls, why = "improved", "sustained speedup across clean-canary samples"
+    elif same_plan and same_index:
+        cls, why = "environment", (
+            "same plan and same index content on a clean window: no "
+            "code-side input left to blame"
+        )
+    elif same_plan:
+        cls, why = "regressed-same-plan", "sustained slowdown on an unchanged plan"
+    else:
+        cls, why = "regressed", "sustained slowdown across clean-canary samples"
+    row.update({"class": cls, "evidence": why})
+    return row
+
+
+def _beyond(prev_sec: float, now_sec: float) -> bool:
+    return abs(now_sec - prev_sec) / prev_sec > DRIFT_TOLERANCE
+
+
+def _lane_drift(prev_round: int, prev: dict, lane_stats: dict) -> dict:
+    """Drift rows for sampled lanes (``_lane_sample`` stats) against the
+    prior record ``prev``, which carries ``{lane}_wall_sec`` walls and its
+    own rows under ``drift.beyond_tolerance``. Only lanes beyond
+    tolerance or watched get a row."""
+    prior_rows = prev.get("drift", {}).get("beyond_tolerance", {})
+    rows: dict[str, dict] = {}
+    checked = 0
+    for lane, stats in lane_stats.items():
+        pv = prev.get(f"{lane}_wall_sec")
+        if not isinstance(pv, (int, float)) or pv <= 0:
+            continue
+        checked += 1
+        watch = _watch(prior_rows.get(lane))
+        if watch or _beyond(pv, stats["min_sec"]):
+            rows[lane] = {
+                "prev_round": prev_round,
+                **_classify_drift(pv, stats, watch=watch),
+            }
+    return {"prev_round": prev_round, "lanes_checked": checked, "beyond_tolerance": rows}
+
+
+def _query_drift(
+    spark, queries, sf_dir, canary, times, stamps, fps, index_fps, prev_round, prev
+) -> tuple[dict, int]:
+    """Drift rows for the benched queries against the prior record.
+
+    A query beyond tolerance of its prior wall, or watched, gets ONE more
+    measurement window. The recorded time becomes the min over the CLEAN
+    windows (a hot retime must not reach the headline with a clean-
+    looking stamp) and ``stamps`` then describes the window that produced
+    it. Updates ``times``/``stamps`` in place; returns (rows, canary
+    reruns spent on retimes)."""
+    prev_times = prev.get("queries", {})
+    same_version = prev.get("fingerprint_version") == FINGERPRINT_VERSION
+    prev_fps = prev.get("plan_fingerprints", {}) if same_version else {}
+    prev_index = prev.get("index_fingerprints", {})
+    drift: dict[str, dict] = {}
+    reruns = 0
+    for name, q in sorted(queries.items()):
+        pv = prev_times.get(name)
+        if not pv:
+            continue
+        watch = _watch(prev.get("drift", {}).get(name))
+        if not (watch or _beyond(pv, times[name])):
+            continue
+        first = times[name]
+        retime, restamp = _measure_query(spark, q, sf_dir, canary)
+        reruns += restamp["reruns"]
+        windows = [(first, stamps[name], "first"), (round(retime, 3), restamp, "retime")]
+        clean = [w for w in windows if not w[1]["dirty"]] or windows
+        kept, kept_stamp, kept_src = min(clean, key=lambda w: w[0])
+        times[name] = kept
+        stamps[name] = {**kept_stamp, "kept_from": kept_src}
+        prev_fp = prev_fps.get(name)
+        row = _classify_drift(
+            pv,
+            {
+                "min_sec": kept,
+                "max_sec": max(w[0] for w in clean),
+                "samples_sec": [w[0] for w in windows],
+                "dirty": kept_stamp["dirty"],
+            },
+            same_plan=(prev_fp == fps[name]) if prev_fp else None,
+            same_index=(
+                prev_index.get(name) == index_fps[name] if name in index_fps else None
+            ),
+            watch=watch,
+        )
+        row.update(
+            prev_round=prev_round,
+            retime_stamp=restamp,
+            fingerprint_prev=prev_fp,
+            fingerprint_now=fps[name],
+        )
+        if name in index_fps:
+            row["index_fingerprint_prev"] = prev_index.get(name)
+            row["index_fingerprint_now"] = index_fps[name]
+        drift[name] = row
+        print(f"# drift {name}: {pv}s -> {kept}s [{row['class']}]", file=sys.stderr)
+    return drift, reruns
+
+
+def _drift_summary(rows: dict) -> dict:
+    """Class counts of drift rows for a stdout line: ``noise`` counts every
+    noise-family class, ``other`` names the rows outside the four counted
+    classes (regressed-*, unmeasurable) — the ones a reader must look at."""
+    counted = {"plan-change": "plan_change", "improved": "improved", "environment": "environment"}
+    out = {"checked": len(rows), "noise": 0, "plan_change": 0, "improved": 0, "environment": 0}
+    other = []
+    for name, row in sorted(rows.items()):
+        cls = row["class"]
+        if cls.startswith("noise"):
+            out["noise"] += 1
+        elif cls in counted:
+            out[counted[cls]] += 1
+        else:
+            other.append(name)
+    out["other"] = other
+    return out
+
+
+#: Streaming keys the stdout line carries (the rest stay in the detail).
+STDOUT_STREAMING_KEYS = (
+    "q5_events_per_sec",
+    "q5_full_query_events_per_sec",
+    "q5_microbatch_latency_p50_sec",
+    "q5_microbatch_latency_p95_sec",
+    "q11_full_query_events_per_sec",
+    "q8_full_query_events_per_sec",
+    "ysb_events_per_sec",
+    "q4_full_query_events_per_sec",
+)
+
+
+def _stdout_payload(
+    sf: float,
+    times: dict,
+    stamps: dict,
+    canary_stats: dict,
+    streaming: dict,
+    drift: dict,
+    host_settled: bool | None,
+    detail_name: str,
+) -> dict:
+    """The parsed stdout record (the full record is the detail
+    file). ``dirty_queries`` counts the queries whose RECORDED value came
+    from a hot canary window — ``stamps`` always describes that window,
+    also after a drift retime replaced the first one."""
+    return {
+        "metric": "headline_total_sec",
+        "value": round(sum(times.values()), 3),
+        "unit": "sec",
+        "queries": times,
+        "sf": sf,
+        "canary": {
+            "cal_sec": canary_stats["effective_calibration_sec"],
+            "max_sec": canary_stats["max_sec"],
+            "reruns": canary_stats["reruns"],
+            "dirty_queries": sum(1 for s in stamps.values() if s["dirty"]),
+        },
+        "streaming": {k: streaming[k] for k in STDOUT_STREAMING_KEYS if k in streaming},
+        "drift": _drift_summary(drift),
+        "host_settled": host_settled,
+        "detail": detail_name,
+    }
+
+
+def _bench_sf() -> tuple[str, float]:
+    """($SPARK_GRAFT_SF_DIR or the sf0.1 default, its scale factor)."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
+    return sf_dir, float(m.group(1)) if m else -1.0
+
+
+def main() -> None:
+    sf_dir, sf = _bench_sf()
     load_start, settle_stamp = _settle_gate(_host_load())
 
+    from squirtle_spark import catalog
+    from squirtle_spark.operators import similarity
     from squirtle_spark.registry import load_all
     from squirtle_spark.session import get_spark
 
@@ -505,325 +732,76 @@ def main() -> None:
 
     # Warm the JVM + parquet footers so per-query times measure the plan,
     # not first-touch overhead.
-    from squirtle_spark import catalog
-
     catalog.register_all(spark, sf_dir)
     for t in catalog.TABLES:
         spark.table(t).count()
-
-    if "--stress" in sys.argv:
-        stress = _stress_bench(spark)
-        stress["host_load"] = {
-            "start": load_start,
-            "end": _host_load(),
-            "settle_gate": settle_stamp,
-        }
-        # start-reading verdict only — see the headline stamp's comment
-        stress["host_settled"] = _settled_verdict(load_start)
-        # Same bounded-stdout discipline as the headline line: the
-        # stress payload crossed 1,600 chars when the 30x ANN point
-        # landed, and one more lane would overflow a 2,000-char tail
-        # capture. Full record always on disk; the printed line sheds
-        # the bulkiest section first if it must.
-        rnd = _round_number()
-        here = os.path.dirname(os.path.abspath(__file__))
-        detail_name = f"STRESS_DETAIL_r{rnd:02d}.json"
-        with open(os.path.join(here, detail_name), "w") as f:
-            json.dump(stress, f, indent=1)
-        # Compact stdout: full lane samples/state/drift live in the
-        # detail file; the line keeps a drift summary (class counts +
-        # any non-noise lanes by name) so a regression is visible even
-        # from the driver's bounded capture.
-        d = stress.get("drift", {})
-        beyond = d.get("beyond_tolerance", {})
-        stress_line = {
-            k: v
-            for k, v in stress.items()
-            if k not in ("lane_samples", "canary", "drift", "rocksdb_state_operators")
-        }
-        stress_line["drift"] = {
-            "prev_round": d.get("prev_round", 0),
-            "lanes_checked": d.get("lanes_checked", 0),
-            "noise": sum(1 for r in beyond.values() if r["class"] == "noise"),
-            "lane_changed": sorted(
-                n for n, r in beyond.items() if r["class"] == "lane-changed"
-            ),
-            "other": sorted(
-                n
-                for n, r in beyond.items()
-                if r["class"] not in ("noise", "lane-changed")
-            ),
-        }
-        stress_line["detail"] = detail_name
-        print(
-            _compact_line(
-                stress_line,
-                shed_order=(
-                    "state_operators",
-                    "rocksdb_lanes",
-                    "state_retention",
-                    "drift",
-                ),
-            )
-        )
-        return
 
     canary = Canary(spark)
     times: dict[str, float] = {}
     stamps: dict[str, dict] = {}
     fingerprints: dict[str, str] = {}
-    fingerprints_v2: dict[str, str] = {}
-    fingerprints_v3: dict[str, str] = {}
-    plan_has_gid: dict[str, bool] = {}
-    aux_fps: dict[str, str] = {}
-    total_reruns = 0
     # PQ-family queries read session-built index views whose CONTENT the
-    # plan fingerprint can't see; their index state gets its own
-    # value-level checksum (VERDICT r8 item 4 — the unresolved
-    # "regressed-same-plan" stamp needed the index ruled in or out).
-    from squirtle_spark.operators import similarity as _similarity
-
-    index_backed = {"ann_pq_topk", "ann_ivfpq_topk"}
+    # plan fingerprint can't see; their index gets a value-level checksum.
+    index_fps: dict[str, str] = {}
+    total_reruns = 0
     for name, q in sorted(queries.items()):
         best, stamp = _measure_query(spark, q, sf_dir, canary)
         total_reruns += stamp["reruns"]
         times[name] = round(best, 3)
         stamps[name] = stamp
-        fps = _plan_fingerprint(q.spark_fn(spark, sf_dir))
-        fingerprints[name] = fps["v4"]
-        fingerprints_v2[name] = fps["v2"]
-        fingerprints_v3[name] = fps["v3"]
-        plan_has_gid[name] = fps["has_gid"]
-        if name in index_backed:
-            aux_fps[name] = _similarity.index_content_fingerprint(spark, sf_dir)
+        fingerprints[name] = _plan_fingerprint(q.spark_fn(spark, sf_dir))
+        if name in ("ann_pq_topk", "ann_ivfpq_topk"):
+            index_fps[name] = similarity.index_content_fingerprint(spark, sf_dir)
         flag = f" [reran {stamp['reruns']}x]" if stamp["reruns"] else ""
         flag += " [DIRTY]" if stamp["dirty"] else ""
         print(f"# {name}: {times[name]:.3f}s{flag}", file=sys.stderr)
 
-    # Drift attribution: any >DRIFT_TOLERANCE swing vs the previous
-    # recorded round gets ONE more measurement window (best-of-2); the
-    # recorded time is the min, and the classification carries evidence.
-    prev_round, prev_times, prev_fps, prev_aux, prev_watch, prev_fp_ver = (
-        _prev_record(sf)
+    prev_round, prev = _prev_record(sf)
+    drift, retime_reruns = _query_drift(
+        spark, queries, sf_dir, canary, times, stamps, fingerprints, index_fps,
+        prev_round, prev,
     )
-    # compare same-version hashes: a prev v2 or v3(legacy) record
-    # matches against our dual-recorded map of that version, v4 vs v4
-    cmp_fps = {2: fingerprints_v2, 3: fingerprints_v3}.get(
-        prev_fp_ver, fingerprints
+    total_reruns += retime_reruns
+    streaming_stats = _stream_q5_bench(
+        spark, canary=canary, prev_round=prev_round, prev=prev.get("streaming", {})
     )
-    drift: dict[str, dict] = {}
-    for name, q in sorted(queries.items()):
-        prev = prev_times.get(name)
-        if not prev:
-            continue
-        delta = (times[name] - prev) / prev
-        if abs(delta) <= DRIFT_TOLERANCE and name not in prev_watch:
-            continue
-        first = times[name]
-        retime, restamp = _measure_query(spark, q, sf_dir, canary)
-        total_reruns += restamp["reruns"]
-        # min over CLEAN windows only: a contaminated retime must not be
-        # laundered into the headline with a clean-looking stamp (and a
-        # stalled window's min can be wrong in either direction once the
-        # running calibration has moved).
-        candidates = [
-            (first, stamps[name], "first"),
-            (round(retime, 3), restamp, "retime"),
-        ]
-        clean = [c for c in candidates if not c[1]["dirty"]]
-        kept, kept_stamp, kept_src = min(
-            clean or candidates, key=lambda c: c[0]
-        )
-        kept_window_dirty = not clean  # recorded value came from a hot window
-        times[name] = kept
-        # query_canary must describe the window that produced the
-        # RECORDED value — before this, a drift retime could replace the
-        # time while the stamp kept describing the discarded first
-        # window (ADVICE r8: detail sections disagreed; only drift had
-        # the truth).
-        stamps[name] = {**kept_stamp, "kept_from": kept_src}
-        kept_delta = (kept - prev) / prev
-        prev_fp = prev_fps.get(name)
-        # v2 mismatch on a gid-bearing plan compared against a v2-era
-        # record: the reproduced multi-COUNT(DISTINCT) slot-permutation
-        # artifact (see the gid-permutation adjudication). Gated on the
-        # plan ACTUALLY containing gid lines (ADVICE r11: the old gate
-        # was `v3 != v2`, which the trailing-newline bug made true for
-        # every plan, gid-free included — a genuine plan change on any
-        # query vs a v2 record would have been mislabeled as the
-        # artifact). Treated as SAME PLAN so the wall delta still gets
-        # the full noise/improved/regressed attribution — an artifact
-        # label that short-circuited classification would launder a
-        # real regression on these plans out of the watchlist and into
-        # the next round's baseline (review r11). The row keeps the
-        # mismatched hashes plus this flag; same-version compares
-        # (v3-legacy or v4) have no such ambiguity.
-        fp_gid_artifact = bool(
-            prev_fp
-            and prev_fp != cmp_fps[name]
-            and prev_fp_ver == 2
-            and plan_has_gid[name]
-        )
-        if prev_fp and prev_fp != cmp_fps[name] and not fp_gid_artifact:
-            cls = "plan-change"
-        elif abs(kept_delta) <= DRIFT_TOLERANCE:
-            cls = "noise"  # the retime reverted the swing on an unchanged plan
-        elif kept_delta < 0:
-            cls = "improved"  # sustained speedup, same plan (or no prior plan)
-        elif prev_fp:
-            if (
-                name in aux_fps
-                and prev_aux.get(name) == aux_fps[name]
-                and not kept_window_dirty
-            ):
-                # Same plan, same index CONTENT (value-level checksum of
-                # the session-built codebook/codes/centroid views), fixed
-                # corpus, clean canaries on the kept window, and the
-                # delta survived min-of-6 samples: no code-side input is
-                # left to blame, so the cause is the environment
-                # (host/JIT), recorded as such instead of an unresolvable
-                # "regressed" (VERDICT r8 item 4).
-                cls = "environment"
-            else:
-                cls = "regressed-same-plan"
-        else:
-            # No prior fingerprint (first detail round) and the delta
-            # survived the retime: can't separate plan change from real
-            # regression without the prior plan — flag for next round.
-            cls = "regressed-no-prior-fingerprint"
-        drift[name] = {
-            "prev_round": prev_round,
-            "prev_sec": prev,
-            "first_sec": first,
-            "retime_sec": round(retime, 3),
-            "retime_stamp": restamp,
-            "kept_window_dirty": kept_window_dirty,
-            "kept_sec": kept,
-            "delta_pct": round(100 * kept_delta, 1),
-            "fingerprint_prev": prev_fp,
-            "fingerprint_now": cmp_fps[name],
-            "fingerprint_compare_version": prev_fp_ver or FINGERPRINT_VERSION,
-            "fingerprint_v2_gid_artifact": fp_gid_artifact,
-            "class": cls,
-        }
-        if name in prev_watch:
-            # Forced row: the prior round left this query in an
-            # unattributed regressed class; this row closes (or renews)
-            # that debt with v2-vs-v2 fingerprints on both sides.
-            drift[name]["watch_prior_class"] = prev_watch[name]
-        if name in aux_fps:
-            drift[name]["index_fingerprint_prev"] = prev_aux.get(name)
-            drift[name]["index_fingerprint_now"] = aux_fps[name]
-        print(f"# drift {name}: {prev}s -> {kept}s [{cls}]", file=sys.stderr)
 
-    streaming_stats = _stream_q5_bench(spark, canary=canary, sf=sf)
-
-    total = round(sum(times.values()), 3)
     rnd = _round_number()
     detail_name = f"BENCH_DETAIL_r{rnd:02d}.json"
+    canary_stats = canary.stats(total_reruns)
+    # host_settled keys on the START reading only: the end reading always
+    # shows the benchmark's own load and is kept for forensics. None (not
+    # False) when /proc/loadavg was unavailable: unknown is not unsettled.
+    host_settled = _settled_verdict(load_start)
+    payload = _stdout_payload(
+        sf, times, stamps, canary_stats, streaming_stats, drift, host_settled,
+        detail_name,
+    )
     detail = {
         "round": rnd,
-        "metric": "headline_total_sec",
-        "value": total,
-        "unit": "sec",
+        "metric": payload["metric"],
+        "value": payload["value"],
+        "unit": payload["unit"],
         "sf": sf,
         "queries": times,
         "query_canary": stamps,
         "fingerprint_version": FINGERPRINT_VERSION,
-        "adjudications": _ADJUDICATIONS,
         "plan_fingerprints": fingerprints,
-        "plan_fingerprints_v2": fingerprints_v2,
-        "plan_fingerprints_v3": fingerprints_v3,
-        "plan_has_gid": plan_has_gid,
-        "index_fingerprints": aux_fps,
+        "index_fingerprints": index_fps,
         "drift": drift,
-        "canary": canary.stats(total_reruns),
-        # Throughput-floor ratio vs the drift baseline's record: the
-        # r15 final records read settled by loadavg (host_settled=true)
-        # yet uniformly +10-18% slower, with the canary p50 at
-        # 0.082-0.084 vs 0.063-0.071 in fast sessions — the degradation
-        # the load average cannot see (thermal/steal). This stamp makes
-        # it machine-visible: a ratio well above 1 alongside uniform
-        # regressed-same-plan rows reads ENVIRONMENT, not code. Data
-        # for adjudication, deliberately NOT an auto-acquittal.
-        "canary_p50_vs_prev": _canary_p50_ratio(canary, sf),
+        "canary": canary_stats,
+        "canary_p50_vs_prev": _canary_p50_ratio(canary, prev),
         "streaming": streaming_stats,
         "host_load": {
             "start": load_start,
             "end": _host_load(),
             "settle_gate": settle_stamp,
         },
+        "host_settled": host_settled,
     }
-    # Verdict keys on the START reading only: the end reading always
-    # shows the benchmark's own 32-thread load (measured: end 1m=5.08
-    # after a quiet-start run) and is recorded for forensics, not
-    # judged — what the stamp must catch is OTHER work at launch.
-    # None (not False) when /proc/loadavg was unavailable: unknown is
-    # not the same as measured-unsettled (ADVICE r14).
-    detail["host_settled"] = _settled_verdict(load_start)
     here = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(here, detail_name), "w") as f:
         json.dump(detail, f, indent=1)
-
-    # Compact stdout line (driver-parseable; full record in the detail file).
-    c = canary.stats(total_reruns)
-    payload = {
-            "metric": "headline_total_sec",
-            "value": total,
-            "unit": "sec",
-            "queries": times,
-            "sf": sf,
-            "canary": {
-                "cal_sec": c["effective_calibration_sec"],
-                "max_sec": c["max_sec"],
-                "reruns": c["reruns"],
-                # dirtiness of the window the RECORDED value came from:
-                # a drift retime that replaced a dirty first window with
-                # a clean measurement cleans the query; a discarded dirty
-                # retime doesn't contaminate it
-                "dirty_queries": sum(
-                    1
-                    for n, s in stamps.items()
-                    if (
-                        drift[n]["kept_window_dirty"]
-                        if n in drift
-                        else s["dirty"]
-                    )
-                ),
-            },
-            "streaming": {
-                k: streaming_stats[k]
-                for k in (
-                    "q5_events_per_sec",
-                    "q5_full_query_events_per_sec",
-                    "q5_microbatch_latency_p50_sec",
-                    "q5_microbatch_latency_p95_sec",
-                    "q11_full_query_events_per_sec",
-                    "q8_full_query_events_per_sec",
-                    "ysb_events_per_sec",
-                    "q4_full_query_events_per_sec",
-                )
-                if k in streaming_stats
-            },
-            "drift": {
-                "checked": len(drift),
-                "noise": sum(1 for d in drift.values() if d["class"] == "noise"),
-                "plan_change": sum(
-                    1 for d in drift.values() if d["class"] == "plan-change"
-                ),
-                "improved": sum(
-                    1 for d in drift.values() if d["class"] == "improved"
-                ),
-                "environment": sum(
-                    1 for d in drift.values() if d["class"] == "environment"
-                ),
-                "other": sorted(
-                    n for n, d in drift.items() if d["class"].startswith("regressed")
-                ),
-            },
-            "host_settled": detail["host_settled"],
-            "detail": detail_name,
-    }
     print(_compact_line(payload))
 
 
@@ -833,8 +811,8 @@ def _compact_line(
     shed_order: tuple[str, ...] = ("drift", "streaming", "canary", "queries"),
 ) -> str:
     """Render the stdout line, shedding optional sections to stay under
-    the driver's bounded stdout-tail capture (~2,000 chars; the r7 line
-    overflowed it and left BENCH_r07.json unparseable). If the payload
+    a bounded stdout-tail capture (~2,000 chars; a longer
+    line is cut and leaves the record unparseable). If the payload
     ever grows the line past the cap, optional sections drop in order —
     the detail file keeps everything — rather than crash or overflow;
     what was shed is recorded in the line itself. The caller's dict is
@@ -877,33 +855,23 @@ def _stream_q5_bench(
     events_per_sec: int = 1000,
     seconds: int = 60,
     canary=None,
-    sf: float = -1.0,
+    prev_round: int = 0,
+    prev: dict | None = None,
 ) -> dict:
     """Streaming anchor vs BASELINE.md: the reference processes 1,000 ev/s
     NEXMark q5 (hopping window) at ~8.5k ev/s effective (10 s of data in
     ~1.18 s source wall, reference README.md:250). Over 60 s of generated
     bids:
 
-    - throughput: large triggers → effective events/sec (hopping agg),
-      canary-guarded (rerun once if the window was hot);
+    - throughput: large triggers → effective events/sec (hopping agg);
     - latency: small triggers → per-micro-batch p50/p95 from
       StreamingQueryProgress (engine-recorded, host-noise-robust);
-    - full q5: the DECLARED query end-to-end (hopping counts + per-window
-      max join-on-aggregate, streaming.run_nexmark_q5_stream).
+    - full q5, q11, q8, ysb and q4: the declared queries end-to-end.
 
-    A warmup stream runs first: the first streaming query in a fresh JVM
-    pays ~10 s of one-time codegen/init, which belongs to JVM startup, not
-    the per-event cost (the batch side amortizes the same way via
-    min-of-2). Steady-state is what the reference's number measures too.
-
-    Every lane records {n_samples, samples, min, max, canary window,
-    dirty} and any >DRIFT_TOLERANCE cross-round wall swing gets a drift
-    row, the same adjudication discipline the batch queries and the
-    stress lanes already have (VERDICT r9 item 3 — the r9 q5-lane
-    -18.5% was a SINGLE unclassed reading; the r10 bisect showed the
-    lane level moves ±20%+ with JIT warm depth alone: 19k ev/s fresh vs
-    24.6k aged in one process, same code, so single samples cannot
-    carry a cross-round verdict).
+    A warm pass pays each streaming path's one-time init (codegen,
+    state-store setup) before its canary-sandwiched samples
+    (``_lane_sample``); lane walls are drift-classed against ``prev``,
+    the prior record's streaming section.
 
     Streaming runs use few shuffle partitions: state-store commit cost
     scales with partition count, so partitions should track state volume,
@@ -951,7 +919,7 @@ def _stream_q5_bench(
         lat = run(4, "ckpt-lat")
 
         # The runner returns a LAZY DataFrame over its parquet result sink
-        # (round-7: no driver-side collect); the noop write materializes
+        # (nothing is collected); the noop write materializes
         # the hot-items join so the timed wall covers the whole query.
         def run_full() -> None:
             streaming.run_nexmark_q5_stream(
@@ -963,7 +931,7 @@ def _stream_q5_bench(
 
         wall_full = lane("q5_full_query", run_full)
 
-        # Full q11 (r9): the APPEND-mode session lane end-to-end —
+        # Full q11: the APPEND-mode session lane end-to-end —
         # sessions emit once as the watermark closes them, state evicts.
         # The bids dir already carries q5's flush sentinel; this runner's
         # own write_flush_epoch refreshes the same reserved epoch
@@ -1044,8 +1012,8 @@ def _stream_q5_bench(
         # Full q4: the chained three-stateful-operator append pipeline
         # (stream-stream interval join → windowed per-auction max →
         # chained per-category partials). The bids dir is ALREADY
-        # sentinel-flushed by the q5 full-query lane above (round 7: the
-        # q5 runner writes its own flush epoch), so dir mutation is no
+        # sentinel-flushed by the q5 full-query lane above (the q5
+        # runner writes its own flush epoch), so dir mutation is no
         # longer ordering-critical: every consumer either filters
         # sentinels (q5 result, q11 sessions) or rejects them via join
         # residuals (the winning-bid interval join — the sentinel's
@@ -1062,17 +1030,9 @@ def _stream_q5_bench(
         )
 
         def run_q4() -> None:
-            # r15 (VERDICT r14 #5) profiled the lane's floor: fixed
-            # per-store commit overhead, 6 state stores/partition (join
-            # 4 + two aggs). In a DEFAULT 32-partition session that
-            # overhead dominates (join commit 186s -> 11s summed and
-            # ~1.9x wall at 8 — the run_nexmark_q4_stream
-            # state_partitions knob + docstring rule came from that),
-            # but this section already runs at 4 partitions, and an
-            # interleaved 4-vs-8 A/B read 4 equal-or-better (7.8/9.6s
-            # vs 10.3/9.9s). The floor at 4 is structural: three
-            # chained stateful exchanges are inherent to join->agg->agg
-            # - so the lane inherits the section default.
+            # The section's 4 partitions already keep the six per-
+            # partition state stores' commit overhead down (measured equal
+            # or better than 8); three chained stateful exchanges remain.
             streaming.run_nexmark_q4_stream(
                 spark,
                 f"{tmp}/bids",
@@ -1104,45 +1064,11 @@ def _stream_q5_bench(
             "q4_full_query_wall_sec": round(wall_q4, 3),
             "q4_full_query_events_per_sec": round(n_q4 / wall_q4, 1),
             "lane_samples": lane_stats,
-            "drift": _stream_bench_drift(sf, lane_stats),
+            "drift": _lane_drift(prev_round, prev or {}, lane_stats),
         }
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-#: Streaming bench lanes whose MEASUREMENT discipline or code changed
-#: this round — same contract as _STRESS_CHANGED_LANES, including the
-#: same hygiene rule: EMPTY THIS AT THE START OF EACH ROUND (a stale
-#: blanket entry would mis-attribute a genuine future regression to a
-#: past measurement change). Round 11: EMPTY — the r10 min-of-2
-#: canary-sandwiched sampling is now the stable baseline and no
-#: streaming lane's code changed this round; r10-vs-r11 lane deltas are
-#: adjudicated by the classifier against the documented warm-depth
-#: bands (see the q5 lane's band annotation).
-_BENCH_STREAM_CHANGED_LANES: dict[str, str] = {}
-
-
-def _stream_bench_drift(sf: float, lane_stats: dict) -> dict:
-    """Cross-round drift for the 1x streaming lanes (VERDICT r9 item 3):
-    prior walls come from the newest prior BENCH_DETAIL at the same sf;
-    classification is the stress classifier's, with this round's
-    lane-changed ledger."""
-    cur = _round_number()
-    prev_round, prev = 0, {}
-    for rnd, f in reversed(_rounds_glob("BENCH_DETAIL_r*.json")):
-        if rnd >= cur:
-            continue
-        try:
-            d = json.load(open(f))
-        except (json.JSONDecodeError, OSError):
-            continue
-        if d.get("sf") == sf and d.get("streaming"):
-            prev_round, prev = rnd, d["streaming"]
-            break
-    return _classify_stress_drift(
-        prev_round, prev, lane_stats, changed=_BENCH_STREAM_CHANGED_LANES
-    )
 
 
 def _timed(fn) -> float:
@@ -1151,42 +1077,13 @@ def _timed(fn) -> float:
     return time.perf_counter() - t0
 
 
-#: Noise floor multiplier on the lane's canary-window relative spread:
-#: the canary is a short fixed-cost probe, so its relative jitter upper-
-#: bounds a long lane wall's (walls integrate noise); 2x adds margin for
-#: the probe under-sampling a bursty window. Used by the stress/stream
-#: drift classifier INSTEAD of the lane's own 2-3-sample spread, which
-#: r11 showed is a thin ruler (spread-equals-delta coincidences on two
-#: samples — VERDICT r11 flag 2).
-CANARY_NOISE_MULT = 2.0
-
-#: Hard ceiling on the canary-derived noise floor. r12's loaded-host run
-#: produced floors of 41-609%, under which ANY plausible single-round
-#: regression reads as "noise" — an unfalsifiable verdict (VERDICT r12
-#: item 3 / ADVICE). Above the cap the window is declared too dirty to
-#: certify anything: the row is classed "unmeasurable" (not "noise"),
-#: which forces a re-record instead of laundering the delta.
-CANARY_FLOOR_CAP = 0.50
-
-
-def _capped_canary_floor(stats: dict) -> tuple[float | None, bool]:
-    """(floor, usable) — the canary noise floor, capped at CANARY_FLOOR_CAP.
-
-    usable=False means the raw floor exceeded the cap: this window's host
-    evidence is too noisy to adjudicate drift at all."""
-    if "canary_rel_spread" not in stats:
-        return None, True
-    raw = CANARY_NOISE_MULT * stats["canary_rel_spread"]
-    return min(raw, CANARY_FLOOR_CAP), raw <= CANARY_FLOOR_CAP
-
-
 def _lane_sample(name, fn, canary, lane_stats, n=3, warm=True):
     """Warm/init pass + ``n`` canary-sandwiched samples of fn() → min.
 
     Records per-lane sample stats INCLUDING the canary window itself
     (samples, relative spread, ratio to the canary's effective
     calibration) so cross-round drift can derive its noise floor from
-    host evidence rather than the lane's own min/max (VERDICT r11 #6)."""
+    host evidence rather than the lane's own min/max."""
     if warm:
         fn()  # path init (codegen, index/codebook builds, dir flushes)
     samples = []
@@ -1225,1051 +1122,6 @@ def _fresh(tmp: str, name: str) -> str:
     import uuid
 
     return os.path.join(tmp, f"{name}-{uuid.uuid4().hex[:8]}")
-
-
-def _stress_prev() -> tuple[int, dict]:
-    """(round, record) of the newest PRIOR round's stress record.
-
-    Prefers the self-written STRESS_DETAIL_r*.json (carries lane sample
-    stats); falls back to driver-stamped STRESS_r*.json. Files whose
-    round >= the current round are skipped (a second run in the same
-    round must not become its own baseline), as are non-matching or
-    unparseable filenames."""
-    cur = _round_number()
-    best: tuple[int, dict] = (0, {})
-    for pattern in ("STRESS_DETAIL_r*.json", "STRESS_r*.json"):
-        for rnd, f in _rounds_glob(pattern):
-            if rnd >= cur or rnd <= best[0]:
-                continue
-            try:
-                d = json.load(open(f))
-            except (json.JSONDecodeError, OSError):
-                continue
-            if isinstance(d, dict) and d.get("metric") == "stress_events_per_sec":
-                best = (rnd, d)
-    return best
-
-
-#: Lanes whose CODE/semantics changed this round — a cross-round wall
-#: delta on these is attributed to the lane rewrite, not host noise or a
-#: regression of unchanged code. Reset each round as lanes stabilize.
-#: Round 11: EMPTY — no stress lane's code changed this round (the r11
-#: api.py fired-ledger fix touches the Query-API replay runner only,
-#: not the native streaming.py lanes these stress paths drive).
-_STRESS_CHANGED_LANES: dict[str, str] = {}
-
-#: Written adjudications of open cross-round perf deltas (VERDICT r9
-#: item 2) — recorded verbatim into BENCH_DETAIL so the verdict on a
-#: flagged delta is machine-visible even in rounds where the delta no
-#: longer crosses DRIFT_TOLERANCE (and hence gets no drift row).
-#: Cleared as items resolve; the long-form evidence lives in SCALING.md.
-_ADJUDICATIONS: dict[str, str] = {
-    "r16 intentional plan changes (ann_cosine_topk, knn_classify, "
-    "semdedup, rollup_multires, dedup_span_removal[_incremental], "
-    "dedup_spans, + all 13 gsum consumers)": (
-        "Six INTENTIONAL r16 rewrites move plan fingerprints: the two "
-        "brute cosine kernels and semdedup's pair scoring now run "
-        "Arrow batch kernels (MapInArrow / FlatMapCoGroupsInPandas + "
-        "NumPy matmul, commits fe52202/498d90a; oracle + 5-seed "
-        "differential green, raw-cos emitted and the declared "
-        "round(.,4) still applied in the JVM), rollup_multires "
-        "REVERTED to the pre-r15 two-branch text (d06a5fa, measured "
-        "faster at every scale), and dedup_span_removal (+ the "
-        "incremental twin) reassembles per-row from the per-doc "
-        "removed-position array instead of exploding every corpus "
-        "token through a doc-keyed (pos, tok)-struct collect_list "
-        "(guide SS2.3; oracle green at 3 SFs, position-swapped A/B "
-        "old mins 1.33-2.86 vs new 0.79-1.79 over 4 fresh-session "
-        "rounds). dedup_spans' fingerprint additionally moves because "
-        "span_pos_sh is now matview-distributed by sh (the gopher "
-        "capture; sh-Exchange gone from both span plans, 1.5-1.7x at "
-        "the 10x fixture, sf0.1 wash). The gsum consumers' fingerprints also "
-        "move because the overflow cap literal changed 9e12->1e12 "
-        "(2d1fea9, static bound replacing the too-loose row cap; "
-        "values bitwise-verified at 3 SFs). Any plan-change drift row "
-        "on these entries vs an r15-era record is these commits."
-    ),
-    "r16 settled-record residual drift (win_analytics, dsir_select)": (
-        "Adjudicated ENVIRONMENT with cross-tree evidence: the r16 "
-        "settled record (canary ratio 1.03, host_settled=true) retired "
-        "six of the seven r15-flagged rows as noise/improved but "
-        "stamped win_analytics +26.4% (0.227->0.287) and dsir_select "
-        "+22.8% (0.359->0.441) regressed-same-plan. Both sources are "
-        "untouched this round and both fingerprints identical. "
-        "Same-day interleaved isolation re-times read the PRE-ROUND "
-        "tree (2e6d66f) at the same or HIGHER walls than r16 HEAD "
-        "(win_analytics pre 0.311-0.365 vs head 0.298-0.326 min; "
-        "dsir_select pre 0.511-0.556 vs head 0.437-0.511) - a this-"
-        "round code regression cannot make the tree WITHOUT the code "
-        "slower. The baseline record's 0.227/0.359 were fast readings "
-        "of the same scatter band (r15 driver read these queries at "
-        "0.314/0.446). Watch: renewed via the drift watchlist as "
-        "usual; convict only if a future canary~1.0 record reads "
-        "beyond the isolation band above."
-    ),
-    "r15 partsupp supplier-count spread (tpch_q2, tpch_q9, tpch_q11, "
-    "tpch_q16, tpch_q20)": (
-        "INTENTIONAL r15 fixture-bridge change (VERDICT r14 #2): the "
-        "partsupp derived view's supplier modulus was hard-coded at 100 "
-        "(sf0.01's supplier count), so sf0.1 partsupp referenced only "
-        "10% of suppliers and tpch_q20's NATION_7 semi-join executed as "
-        "an AQE EmptyRelation at bench scale. The modulus now comes "
-        "from the supplier table's row count (TPC-H's own "
-        "(partkey + i*(S/4)) % S spread), baked as a literal at "
-        "register_all time. q20 sf0.1 now returns 4 rows and its bench "
-        "wall measures the real nested-IN semi-join chain, not "
-        "empty-relation propagation - expect q20 slower than r14's "
-        "0.445s artifact and value-level changes (not plan-shape "
-        "changes) in the other partsupp consumers."
-    ),
-    "r15 ysb lane drift (ysb)": (
-        "Adjudicated ENVIRONMENT: the r15 drift classifier stamps ysb "
-        "'regressed' vs r14's 1.75s (r15 baseline 2.17s, mid-round "
-        "2.42s), but no streaming-path code changed between the r15 "
-        "baseline commit and HEAD (git diff bb32140..HEAD over "
-        "streaming.py/sources.py/bench.py is empty), the one new "
-        "per-micro-batch component this round (the state-pressure "
-        "advisor listener, commit a465770) was A/B'd out-of-band with "
-        "fresh interleaved sessions and read EQUAL-or-better with the "
-        "listener installed (advisor 5.3-6.3s vs noadvisor 4.2-16.4s "
-        "walls at default partitions), and the same-day lane pattern "
-        "is mixed (q5_full 3.23s and q11 2.90s BETTER than r14's "
-        "3.3s-class walls; ysb/q8 slower) - a uniform code regression "
-        "does not speed up two stateful lanes while slowing the "
-        "stateless broadcast-join lane. Watch: if a settled r16 run "
-        "still reads >2.1s, profile the file-source listing path."
-    ),
-    "r15 closing-record uniform drift (bm25_topk, bpe_train_merges, "
-    "dedup_exact, pii_scan, win_analytics, win_session, win_tumbling)": (
-        "Adjudicated ENVIRONMENT: the closing r15 record (18.673s) "
-        "stamps 7 queries regressed-same-plan - every one with an "
-        "IDENTICAL plan fingerprint - while its canary p50 reads "
-        "0.084s vs 0.063-0.071s in the round's fast sessions (r14 "
-        "baseline 0.071) and the whole-run median sits +16% above the "
-        "same-HEAD-class 15.798s record. CORRECTION (r16, VERDICT r15 "
-        "item 1): the original row ALSO claimed all 7 had 'UNTOUCHED "
-        "source this round' - overstated for win_session and "
-        "win_tumbling, whose file lines e24de77 did touch (dsum->gsum "
-        "in their oracle bodies). r16 re-derivation proves the touch "
-        "changed NOTHING EXECUTED: gsum(x, DUCK) renders byte-equal to "
-        "dsum(x, DUCK) (dialect.py - asserted in test_bench_helpers), "
-        "both queries' _win_*_oracle(DUCK) texts render byte-identical "
-        "at e24de77^ vs HEAD, and the benched Spark forms are "
-        "DataFrames (_win_session_df/_win_tumbling_df) the commit's "
-        "diff never touches - consistent with the identical plan "
-        "fingerprints. The executed-query-untouched conclusion (and "
-        "the ENVIRONMENT verdict) stands on that corrected basis. "
-        "Uniform same-fingerprint elevation tracking the canary floor "
-        "is host throughput degradation the loadavg settle gate cannot "
-        "see; the canary_p50_vs_prev stamp makes the class "
-        "machine-visible. Watch: any of the 7 still >DRIFT_TOLERANCE "
-        "in a r16 record whose canary ratio is ~1.0 is a real "
-        "regression."
-    ),
-    "r15 win_analytics drift (win_analytics)": (
-        "Adjudicated ENVIRONMENT: the final r15 settled record stamps "
-        "win_analytics 'regressed-same-plan' (+24.9% vs r14's 0.205s) "
-        "with an IDENTICAL plan fingerprint and zero r15 commits "
-        "touching queries/windows.py. The same record reads a median "
-        "+16.5% across ALL 48 queries vs the same-HEAD-class settled "
-        "run earlier the same day (15.798s total; even the untouched "
-        "tpch_q6 canary-class query read +21%) - uniform same-plan "
-        "elevation is session scatter, not code. Watch: if the r16 "
-        "settled run still reads >0.24s, re-time in isolation."
-    ),
-    "r15 q4 lane profile (q4_full_query)": (
-        "VERDICT r14 #5 adjudicated STRUCTURAL: profiling attributed "
-        "the lane's floor to fixed per-store commit overhead - 6 state "
-        "stores/partition (symmetric join 4 + 2 aggs). In a default "
-        "32-partition session that dominates (join commit 186s -> 11s "
-        "summed, ~1.9x wall at 8; hence the new run_nexmark_q4_stream "
-        "state_partitions knob and its size-to-per-batch-volume rule), "
-        "but the bench streaming section already runs at 4 partitions "
-        "and an interleaved 4-vs-8 A/B read 4 equal-or-better - the "
-        "remaining floor is the three chained stateful exchanges "
-        "inherent to join->agg->agg. The lane keeps the section "
-        "default; the r15 driver-visible q4 number carries the same "
-        "decaying-external-load signature as q8/ysb that round "
-        "(within-lane samples 9.16 -> 8.05 monotone on a stamped "
-        "settled start whose host later spiked to 1m=16 with an idle "
-        "VM)."
-    ),
-    "dedup_incremental_minhash": (
-        "VERDICT r13's +17% driver-run delta adjudicated r14 "
-        "(AB_ADJUDICATION_r14.json): query SQL, matview pipeline and "
-        "v3/v4 plan fingerprints identical r12->r14; a 7-round "
-        "interleaved deep-warm fresh-session A/B with position and "
-        "zip-ship controls pools to +0.8% (round scatter +/-20-30%), "
-        "and neither side reproduces the driver's 0.523s wall in "
-        "isolation. Class: suite-context/environment, no code delta - "
-        "the same mechanism AB_ADJUDICATION_r13 pinned for nexmark_q4."
-    ),
-    "r14 IVF-PQ probe routing (ann_ivfpq_topk, ann_pq_topk)": (
-        "INTENTIONAL r14 plan change (commit d82fc4e): probe routing "
-        "moved driver-side against the cached centroid table (bit-equal "
-        "to the distributed SQL form, parity-tested) and the "
-        "query-batch-bounded probes/LUT sides carry BROADCAST hints, "
-        "removing the two stat-less SortMergeJoins. 1.08 -> 0.645s at "
-        "sf0.1 (pq 0.58 -> 0.54: the hints live in the shared _ann_pq "
-        "generator, so ann_pq_topk's fingerprint moved too). Any r14 "
-        "'plan-change' drift row on these two is this fix; values "
-        "unchanged (routed == distributed == oracle, "
-        "tests/test_similarity.py)."
-    ),
-    "dedup_spans": (
-        "r14's regressed-same-plan row (+25.3%, 0.573 -> 0.718, v4 "
-        "fingerprint identical, source untouched r13->r14) adjudicated "
-        "same-day (AB_ADJUDICATION_r14.json question_2): interleaved "
-        "deep-warm A/B vs the r13 tree pools to +3.2% with the sign "
-        "flipping per round, and BOTH trees run 0.63-0.68 isolated "
-        "against the r13-recorded 0.573 - a uniform host-day elevation, "
-        "the same weather that had the builder's first unsettled r14 "
-        "run convicting four queries its settled re-run acquitted. "
-        "Environment-of-day; the auto-watch stays armed."
-    ),
-    "tpch_q9 / dq_profile (r14 stamped-record rows)": (
-        "Both regressed-same-plan rows in the committed r14 record "
-        "adjudicated same-day (AB_ADJUDICATION_r14.json question_3): "
-        "interleaved deep-warm A/B vs the r13 tree pools tpch_q9 to "
-        "+4.0% (neither tree reproduces the 0.296 baseline in "
-        "isolation; both run 0.33-0.36 on the day) and dq_profile to "
-        "-1.1% (its FOURTH consecutive suite-context adjudication - "
-        "the two COUNT(DISTINCT) Expands make it the suite's most "
-        "context-sensitive wall). Environment; watches stay armed."
-    ),
-    "r12 degenerate-probe fixes (ann_cosine_topk, ann_sq8_topk, decontaminate_embedding[_bucketed])": (
-        "Four benched queries carry INTENTIONAL r12 plan changes from "
-        "the degenerate-fixture probe: every cosine-ranking vector "
-        "source now filters zero-norm embeddings in both dialects "
-        "(dialect.norm_positive — Spark's ANSI division DIES on one "
-        "corrupt row while DuckDB's list_cosine_similarity silently "
-        "returns -1.0), and the bucketed decon additionally moved its "
-        "LSH bucket keys into the session matview this round. Values "
-        "on all existing fixtures are unchanged (no zero vectors "
-        "exist there); the full registry is green on the new "
-        "degenerate fixture (DIFFERENTIAL_r12 'degenerate' section)."
-    ),
-    "r12 differential-lane fixes (win_analytics, chunk_documents, dedup_spans)": (
-        "Three benched queries carry INTENTIONAL r12 plan changes from "
-        "the randomized differential lane's bug fixes (DIFFERENTIAL_r12: "
-        "191/191 green x 5 seeds after): win_analytics pins NULLS LAST "
-        "on its rank windows (Spark/DuckDB default NULL placement "
-        "diverges), chunk_documents guards Spark's sequence(1,0) crash "
-        "on zero-token docs with a CASE around the explode, dedup_spans "
-        "guards a DIVIDE_BY_ZERO the same way. Any r12 'plan-change' "
-        "drift row on these three is these fixes; values on the driver "
-        "fixtures are unchanged (all three oracle-green both before and "
-        "after at sf0.01)."
-    ),
-    "nexmark_q9": (
-        "r9's +25.6% 'plan-change' was a fingerprint artifact, not a plan "
-        "change: v1 fingerprints hashed metadata strings truncated at "
-        "spark.sql.maxMetadataStringLength, and the truncation offset moves "
-        "with the byte-width of expression ids, which grow with session age "
-        "(r9's matview builds consume thousands of ids before q9 is "
-        "fingerprinted). Reproduced: r8 and r9 code give IDENTICAL q9 plans "
-        "in a fresh session, and replaying the r9 bench prefix reproduces "
-        "the recorded 0ffd54968673 hash on that identical plan. Fingerprints "
-        "are v2 (untruncated) from r10; the residual wall delta is session "
-        "aging, adjudicated in SCALING.md (nexmark_q9 drift note)."
-    ),
-    "streaming.q5": (
-        "r9's q5 window-lane 25,585 -> 20,842 ev/s: see SCALING.md "
-        "(q5 streaming lane drift note) and this round's streaming lane "
-        "stats/drift section for the bisect verdict."
-    ),
-    "stress.ann_pq_10x": (
-        "r10 stress drift row 'regressed' 1.032 -> 1.249 s (+21%, barely "
-        "over tolerance, min-of-3 clean). Host-level, not code: the SAME "
-        "search at 3x the corpus is flat-to-better the same run "
-        "(ann_pq_30x 2.76 -> 2.70 s, scaled ivfpq_30x 1.74 -> 1.53 s) — "
-        "a code regression in the ADC scan would scale WITH the scan; "
-        "matches the round's independently A/B'd host shift on "
-        "dsir_select. Structural 30x claim intact: PQ 2.70 vs IVF-PQ "
-        "1.53 s at recall 1.0."
-    ),
-    "regressed-no-prior-fingerprint (class)": (
-        "RESOLVED r11. The five r10 rows in this class (dsir_select, "
-        "dedup_spans, dedup_incremental_minhash, "
-        "decontaminate_ngram_overlap, chunk_documents) were re-measured "
-        "with v2 fingerprints on BOTH sides via the forced-drift "
-        "watchlist (watch_prior_class rows in this file's drift "
-        "section): all five v2 plan hashes are IDENTICAL r10 vs r11, "
-        "and all five walls recovered to BELOW the r10 reading "
-        "(dsir_select -32.6% improved, dedup_spans -22.8%, "
-        "dedup_incremental_minhash -20.5%, decontaminate_ngram_overlap "
-        "-12.2%, chunk_documents -14.3%) — confirming the r10 deltas "
-        "were host-level, exactly as the dsir_select fresh-session A/B "
-        "indicated. Any regressed-* class now auto-watchlists for the "
-        "next round, so this one-round-blind situation cannot recur "
-        "silently."
-    ),
-    "gid-permutation fingerprint artifact (dq_profile, interval_overlap_join)": (
-        "r11: both showed v2 'plan-change' rows while 40% FASTER and "
-        "code-untouched. Reproduced in ONE session: fingerprinting the "
-        "same query fresh vs after a few other queries gives different "
-        "v2 hashes because Spark assigns multi-COUNT(DISTINCT) Expand "
-        "gid slots (and the dependent grouping-key/branch/FILTER order) "
-        "from an unordered collection whose iteration order moves with "
-        "session state — a pure permutation of the identical plan, "
-        "verified line-by-line. Fixed as fingerprint v3 (gid numerals "
-        "blanked + comma-fragment multiset on gid# lines); v2 is "
-        "dual-recorded so the v2→v3 switch has NO blind window, unlike "
-        "v1→v2. Any remaining plan-change row on these two queries "
-        "against a v2-era record is this artifact. CORRECTION (r12, "
-        "ADVICE r11): the original r11 text here claimed 'all other "
-        "plans hash v2-identical' under v3 — false: v3 joined lines "
-        "with \\n and dropped the plan's trailing newline, so all 47 "
-        "r11 v3 hashes differ from v2, gid-free plans included "
-        "(BENCH_DETAIL_r11 proves it, e.g. tpch_q6). That also made "
-        "the fp_gid_artifact gate (defined as v3 != v2) vacuously true "
-        "for every query. v4 fixes both: gid lines are rewritten in "
-        "place with line endings byte-preserved, so gid-free v4 == v2 "
-        "by construction (asserted in test_bench_helpers), and the "
-        "artifact gate now keys on the plan actually containing gid# "
-        "lines. v3-legacy is dual-recorded for one round so the r11 "
-        "v3 record stays comparable — no blind window."
-    ),
-}
-
-
-#: lane -> (round, wall_sec, why): explicit baseline RE-BASES for the
-#: noise-watch, each backed by a committed adjudication artifact. Without
-#: this, a watch whose carried baseline was itself proven a measurement
-#: artifact renews forever: the r13 interleaved A/B
-#: (AB_ADJUDICATION_r13.json streaming_phase, commit 80d3d57) showed
-#: r11's recorded q5_full 3.489s / q11_session 2.911s unreproducible
-#: EVEN BY THE R11 CODE (which measured 112-139k ev/s, nowhere near its
-#: recorded 158k/190k) — a fast-window artifact — while head walls sat
-#: at 4.04-4.07s / 3.36-3.47s. The watch adjudicates against that
-#: A/B-certified band instead, so it can actually close (VERDICT r13 #4).
-STRESS_BASELINE_REBASE: dict[str, tuple] = {
-    "q5_full": (
-        13,
-        4.05,
-        "AB_ADJUDICATION_r13 streaming_phase: head walls 4.036-4.074s; "
-        "r11's recorded 3.489s proven a fast-window artifact",
-    ),
-    "q11_session": (
-        13,
-        3.41,
-        "AB_ADJUDICATION_r13 streaming_phase: head walls 3.358-3.467s; "
-        "r11's recorded 2.911s proven a fast-window artifact",
-    ),
-}
-
-
-def _classify_stress_drift(
-    prev_round: int, prev: dict, lane_stats: dict, changed: dict | None = None
-) -> dict:
-    """Cross-round stress attribution (VERDICT r8 item 2): every lane's
-    wall delta vs the previous round is classed with evidence —
-    ``lane-changed`` (the lane's code or measurement changed this round,
-    see _STRESS_CHANGED_LANES / the caller's ``changed`` ledger),
-    ``noise`` (the measuring window's canary was hot, or the prior
-    value falls inside this round's [min,max], or the swing is within
-    the CANARY-derived noise floor — CANARY_NOISE_MULT × the canary
-    window's relative spread, host evidence rather than the lane's own
-    2-3-sample min/max, which r11 proved a thin ruler when
-    spread-equals-delta coincidences adjudicated two improvements),
-    ``improved``/``regressed`` (sustained, clean-canary delta beyond
-    tolerance and beyond the canary floor). Lanes recorded before the
-    canary window rode along (pre-r12) fall back to the old intra-round
-    spread rule so old artifacts stay classifiable. Only lanes beyond
-    DRIFT_TOLERANCE get a row — EXCEPT lanes the previous round classed
-    ``noise`` on a beyond-tolerance SLOWDOWN: unlike the headline batch
-    path (whose
-    retime REPLACES the recorded value, so a noise verdict never
-    pollutes the baseline), these lanes record min-of-N directly, so a
-    real regression classed noise in a hot window would silently become
-    the next round's comparison base. Those lanes get a FORCED row
-    carrying the pre-noise BASELINE wall: back within tolerance of the
-    baseline → ``noise-reverted`` (host verdict confirmed, debt
-    closed); raw canary floor beyond the cap → ``unmeasurable`` (window
-    can't certify either way, debt renews); still elevated with a
-    hot/jittery canary → ``noise-sustained`` (debt renews); still
-    elevated on a QUIET canary → ``regressed-vs-baseline`` — the
-    launder is caught, two rounds late at worst. ``unmeasurable`` rows
-    (forced or main-path) carry the watch forward like noise ones."""
-    if changed is None:
-        changed = _STRESS_CHANGED_LANES
-    prev_drift = {}
-    if isinstance(prev, dict):
-        prev_drift = prev.get("drift", {}).get("beyond_tolerance", {})
-    noise_watch: dict[str, dict] = {}
-    for lane, row in prev_drift.items():
-        cls_prev = str(row.get("class", ""))
-        # unmeasurable slowdowns launder exactly like noise ones (the lane
-        # recorded min-of-N as the next comparison base either way), so
-        # they carry the watch too (ADVICE r13)
-        if cls_prev == "noise-reverted" or not (
-            cls_prev.startswith("noise") or cls_prev == "unmeasurable"
-        ):
-            continue
-        slow_now = row.get("delta_pct", 0) > DRIFT_TOLERANCE * 100
-        slow_base = row.get("baseline_delta_pct") is not None and (
-            row["baseline_delta_pct"] > DRIFT_TOLERANCE * 100
-        )
-        if slow_now or slow_base:  # only SLOWDOWNS can launder a regression
-            base_round = row.get("baseline_round", row.get("prev_round"))
-            base_wall = row.get("baseline_wall_sec", row.get("prev_wall_sec"))
-            reb = STRESS_BASELINE_REBASE.get(lane)
-            rebased = None
-            if reb and isinstance(base_round, int) and base_round < reb[0]:
-                base_round, base_wall, rebased = reb
-            noise_watch[lane] = {
-                "round": base_round,
-                "wall_sec": base_wall,
-                "rebased": rebased,
-            }
-    drift: dict[str, dict] = {}
-    checked = 0
-    for lane, stats in lane_stats.items():
-        key = f"{lane}_wall_sec"
-        pv = prev.get(key)
-        if not isinstance(pv, (int, float)) or pv <= 0:
-            continue
-        checked += 1
-        cv = stats["min_sec"]
-        delta = (cv - pv) / pv
-        watch = noise_watch.get(lane)
-        if abs(delta) <= DRIFT_TOLERANCE and not watch:
-            continue
-        if abs(delta) <= DRIFT_TOLERANCE and watch:
-            # forced row: adjudicate against the pre-noise baseline
-            base = watch["wall_sec"]
-            bdelta = (cv - base) / base if base else 0.0
-            canary_floor, floor_usable = _capped_canary_floor(stats)
-            if abs(bdelta) <= DRIFT_TOLERANCE or bdelta < 0:
-                cls, why = "noise-reverted", (
-                    "prior round's noise verdict confirmed: wall back at "
-                    "the pre-noise baseline"
-                )
-            elif canary_floor is not None and not floor_usable:
-                # raw floor blew the cap: this window can't certify the
-                # baseline delta either way — neither acquit via the capped
-                # floor nor convict "on a QUIET canary" (ADVICE r13)
-                cls, why = "unmeasurable", (
-                    f"canary window rel spread "
-                    f"{100 * stats['canary_rel_spread']:.0f}% puts the raw "
-                    f"noise floor above the {100 * CANARY_FLOOR_CAP:.0f}% cap "
-                    "— host too noisy to adjudicate the baseline delta; "
-                    "watch renews, re-record on an idle host"
-                )
-            elif stats["dirty"] or (
-                canary_floor is not None and canary_floor >= abs(bdelta)
-            ):
-                cls, why = "noise-sustained", (
-                    "still elevated vs the pre-noise baseline but this "
-                    "window's canary is hot/jittery too — watch renews"
-                )
-            else:
-                cls, why = "regressed-vs-baseline", (
-                    "elevated vs the pre-noise baseline on a QUIET canary: "
-                    "the prior noise verdict laundered a real regression"
-                )
-            drift[lane] = {
-                "prev_round": prev_round,
-                "prev_wall_sec": pv,
-                "wall_sec": cv,
-                "samples_sec": stats["samples_sec"],
-                "delta_pct": round(100 * delta, 1),
-                "watch_prior_class": "noise",
-                "baseline_round": watch["round"],
-                "baseline_wall_sec": base,
-                "baseline_delta_pct": round(100 * bdelta, 1),
-                "class": cls,
-                "evidence": why,
-            }
-            if watch.get("rebased"):
-                drift[lane]["baseline_rebased"] = watch["rebased"]
-            continue
-        spread = (stats["max_sec"] - stats["min_sec"]) / max(stats["min_sec"], 1e-9)
-        canary_floor, floor_usable = _capped_canary_floor(stats)
-        if lane in changed:
-            cls, why = "lane-changed", changed[lane]
-        elif stats["dirty"]:
-            cls, why = "noise", "canary-hot measurement window"
-        elif stats["min_sec"] <= pv <= stats["max_sec"]:
-            cls, why = "noise", "previous value inside this round's sample range"
-        elif not floor_usable and canary_floor is not None and abs(delta) > canary_floor:
-            # raw floor blew past the cap: the window can't certify this
-            # delta either way — demand a re-record, don't class it noise
-            cls, why = "unmeasurable", (
-                f"canary window rel spread {100 * stats['canary_rel_spread']:.0f}% "
-                f"puts the raw noise floor above the {100 * CANARY_FLOOR_CAP:.0f}% "
-                f"cap — host too noisy to adjudicate a {100 * abs(delta):.0f}% "
-                "delta; re-record this lane on an idle host"
-            )
-        elif canary_floor is not None and canary_floor >= abs(delta):
-            cls, why = "noise", (
-                f"canary noise floor {100 * canary_floor:.0f}% "
-                f"({CANARY_NOISE_MULT}x window rel spread "
-                f"{100 * stats['canary_rel_spread']:.0f}%"
-                f"{', capped' if not floor_usable else ''}) >= "
-                f"cross-round delta {100 * abs(delta):.0f}%"
-            )
-        elif canary_floor is None and spread >= abs(delta):
-            # pre-r12 record without a canary window: legacy spread rule
-            cls, why = "noise", (
-                f"intra-round sample spread {100 * spread:.0f}% >= "
-                f"cross-round delta {100 * abs(delta):.0f}% "
-                "(legacy rule: no canary window recorded)"
-            )
-        elif delta < 0:
-            cls, why = "improved", "sustained speedup across clean-canary samples"
-        else:
-            cls, why = "regressed", "sustained slowdown across clean-canary samples"
-        drift[lane] = {
-            "prev_round": prev_round,
-            "prev_wall_sec": pv,
-            "wall_sec": cv,
-            "samples_sec": stats["samples_sec"],
-            "intra_round_spread_pct": round(100 * spread, 1),
-            "canary_noise_floor_pct": (
-                round(100 * canary_floor, 1) if canary_floor is not None else None
-            ),
-            "canary_floor_capped": not floor_usable,
-            "delta_pct": round(100 * delta, 1),
-            "class": cls,
-            "evidence": why,
-        }
-        if watch:
-            base = watch["wall_sec"]
-            drift[lane].update(
-                {
-                    "watch_prior_class": "noise",
-                    "baseline_round": watch["round"],
-                    "baseline_wall_sec": base,
-                    "baseline_delta_pct": (
-                        round(100 * (cv - base) / base, 1) if base else None
-                    ),
-                }
-            )
-            if watch.get("rebased"):
-                drift[lane]["baseline_rebased"] = watch["rebased"]
-    return {
-        "prev_round": prev_round,
-        "lanes_checked": checked,
-        "beyond_tolerance": drift,
-    }
-
-
-def _stress_bench(spark, events_per_sec: int = 10_000, seconds: int = 60) -> dict:
-    """10x-rate streaming stress — SCALING.md's headroom claim as data.
-
-    Runs the q5 full pipeline, the q11 APPEND-mode session lane, the q8
-    stream-stream windowed join, the q4 chained three-stateful
-    pipeline, and the CDC versioned-snapshot apply over 10x the bench
-    event rate (~552k bids / 480k entities / 552k changes)
-    and reports sustained ev/s. The expected
-    shape: throughput RISES vs the 1x numbers because per-event cost
-    amortizes fixed micro-batch overhead — state-store-bound pipelines
-    get cheaper per event with volume until state exceeds memory (the
-    RocksDB provider is the cluster answer there).
-
-    Cleanliness (VERDICT r8 item 2 — every r8 lane read ~20-25% below r7
-    with no code change and only prose to blame the host): each lane now
-    runs warm + N canary-sandwiched samples and the artifact records
-    {n_samples, samples, min, max, canary window, dirty} per lane, plus
-    a drift section classing any >20% cross-round delta as
-    {lane-changed | noise | improved | regressed} with evidence — the
-    same attribution discipline the headline bench already has.
-    """
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from squirtle_spark import sources, streaming
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    tmp = tempfile.mkdtemp(prefix="bench-stress-")
-    canary = Canary(spark)
-    lane_stats: dict[str, dict] = {}
-
-    def lane(name: str, fn, n: int = 3) -> float:
-        """Warm/init run, then ``n`` canary-sandwiched measured samples;
-        records the lane's sample stats and returns the min wall
-        (shared _lane_sample: min-of-3 + canary-window noise evidence,
-        VERDICT r11 #6)."""
-        return _lane_sample(name, fn, canary, lane_stats, n=n, warm=True)
-
-    try:
-        bids = sources.nexmark_bids(spark, events_per_sec, seconds)
-        n = bids.count()
-        staged = bids.withColumn(
-            "epoch", F.unix_timestamp(F.col("b_date_time").cast("timestamp")) % 100000
-        )
-        streaming.write_epoch_files(staged, f"{tmp}/bids")
-
-        state_metrics: dict[str, dict] = {}
-
-        def run_q5() -> None:
-            m: dict = {}
-            streaming.run_nexmark_q5_stream(
-                spark,
-                f"{tmp}/bids",
-                checkpoint=_fresh(tmp, "q5"),
-                files_per_trigger=15,
-                metrics=m,
-            ).write.format("noop").mode("overwrite").save()
-            state_metrics["q5"] = m.get("state_operators", {})
-
-        wall_q5 = lane("q5_full", run_q5)
-
-        # q11 APPEND-mode session lane (VERDICT r8 item 1): sessions emit
-        # once on watermark close and the session store EVICTS — this
-        # lane's state metrics are the measured final << peak evidence
-        # (the old complete-mode lane re-emitted every session each batch
-        # and its store could never evict: final == peak by construction).
-        def run_q11() -> None:
-            m: dict = {}
-            streaming.run_nexmark_q11_append_stream(
-                spark,
-                f"{tmp}/bids",
-                checkpoint=_fresh(tmp, "q11"),
-                gap_s=10,
-                files_per_trigger=15,
-                metrics=m,
-            ).write.format("noop").mode("overwrite").save()
-            state_metrics["q11"] = m.get("state_operators", {})
-
-        wall_q11 = lane("q11_session", run_q11)
-
-        # q8: genuine two-sided stream-stream join state at 10x volume —
-        # production-shaped (flush sentinels + finite watermark), so a
-        # run of this lane records EVICTION in its state metrics (final
-        # rows ≈ the two sentinels, not the peak — STRESS_r07.json
-        # predates this configuration and shows final == peak), matching
-        # test_nexmark_q8_stream_evicts_state_with_flush.
-        persons = sources.nexmark_persons(spark, 10 * events_per_sec, seconds)
-        auctions = sources.nexmark_auctions(spark, 10 * events_per_sec, seconds)
-        n_q8 = persons.count() + auctions.count()
-        for df, ts, sub in (
-            (persons, "p_date_time", "p"),
-            (auctions, "a_date_time", "a"),
-        ):
-            streaming.write_epoch_files(
-                df.withColumn(
-                    "epoch", F.unix_timestamp(F.col(ts).cast("timestamp")) % 100000
-                ),
-                f"{tmp}/{sub}",
-            )
-        for sub, ts, keys in (
-            ("p", "p_date_time", ["p_id"]),
-            ("a", "a_date_time", ["a_id", "seller"]),
-        ):
-            streaming.write_flush_epoch(spark, f"{tmp}/{sub}", ts, 3_600, keys)
-
-        def run_q8() -> None:
-            m: dict = {}
-            streaming.run_nexmark_q8_stream(
-                spark,
-                f"{tmp}/p",
-                f"{tmp}/a",
-                checkpoint=_fresh(tmp, "q8"),
-                size_s=10,
-                watermark="600 seconds",
-                files_per_trigger=30,
-                metrics=m,
-            )
-            state_metrics["q8"] = m.get("state_operators", {})
-
-        wall_q8 = lane("q8_join", run_q8)
-
-        # q4 chained three-stateful pipeline at 10x. The bids dir was
-        # already flushed by run_q5 above (its sentinel is filtered or
-        # residual-rejected by every later consumer — see
-        # _stream_q5_bench); q4 last keeps the auction-dir flush its own.
-        q4_aucs = sources.nexmark_auctions(spark, events_per_sec, seconds)
-        n_q4 = n + q4_aucs.count()
-        streaming.write_epoch_files(
-            q4_aucs.withColumn(
-                "epoch",
-                F.unix_timestamp(F.col("a_date_time").cast("timestamp")) % 100000,
-            ),
-            f"{tmp}/a4",
-        )
-
-        def run_q4() -> None:
-            m: dict = {}
-            streaming.run_nexmark_q4_stream(
-                spark,
-                f"{tmp}/bids",
-                f"{tmp}/a4",
-                checkpoint=_fresh(tmp, "q4"),
-                files_per_trigger=30,
-                metrics=m,
-            )
-            state_metrics["q4"] = m.get("state_operators", {})
-
-        wall_q4 = lane("q4_chained", run_q4)
-
-        # CDC apply at 10x volume: a 552k-change stream (100k keys, ~10%
-        # deletes) merged into the versioned snapshot table — ~22 atomic
-        # commits of a tombstoned max-seq merge, the warehouse sink's
-        # sustained apply rate.
-        n_keys = 100_000
-        chunk = max(1, n // 22)
-        changes = spark.range(n).selectExpr(
-            f"id % {n_keys} AS key",
-            "id AS seq",
-            "CASE WHEN id % 10 = 7 THEN 'D' ELSE 'U' END AS op",
-            "CAST(id AS DOUBLE) AS val",
-            f"CAST(id DIV {chunk} AS INT) AS epoch",
-        )
-        streaming.write_epoch_files(changes, f"{tmp}/cdc")
-
-        def run_cdc() -> None:
-            q = streaming.cdc_sink(
-                streaming.replay_stream(spark, f"{tmp}/cdc", 1).drop("epoch"),
-                _fresh(tmp, "cdc-table"),
-                keys=["key"],
-                seq_col="seq",
-                op_col="op",
-                checkpoint=_fresh(tmp, "cdc-ckpt"),
-            )
-            assert q.awaitTermination(600)
-
-        wall_cdc = lane("cdc_apply", run_cdc)
-
-        # Same changelog through the merge-on-read lane: raw delta-log
-        # appends + periodic compaction + one final fold (cdc_mor_sink),
-        # the high-rate shape for uniform-key CDC where snapshot-per-batch
-        # spends each batch rewriting unchanged rows.
-        def run_mor() -> None:
-            table = _fresh(tmp, "mor-table")
-            q = streaming.cdc_mor_sink(
-                streaming.replay_stream(spark, f"{tmp}/cdc", 1).drop("epoch"),
-                table,
-                keys=["key"],
-                seq_col="seq",
-                op_col="op",
-                checkpoint=_fresh(tmp, "mor-ckpt"),
-                compact_every=12,
-            )
-            assert q.awaitTermination(600)
-            streaming.compact_cdc_mor(spark, table, ["key"], "seq")
-
-        wall_mor = lane("cdc_mor", run_mor)
-
-        # Curation ingest lane: the training-data pipeline under volume.
-        # sf0.1 documents replicated 10x (1 in 5 replicas keeps the
-        # original text, so exact-dup detection does real work; the rest
-        # get a replica-unique suffix), streamed through the FULL
-        # stream_curation lane — length gate, within-batch dedup,
-        # anti-join vs the accumulated accepted store (which GROWS as the
-        # run proceeds, the honest part), and PII-masked storage.
-        sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-        from pyspark.sql import functions as FF
-        from squirtle_spark.operators import curation
-
-        base = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "text"
-        )
-        docs10 = (
-            base.withColumn("r", FF.explode(FF.sequence(FF.lit(0), FF.lit(9))))
-            .select(
-                (FF.col("doc_id") * 10 + FF.col("r")).alias("doc_id"),
-                FF.when(FF.col("r") % 5 == 0, FF.col("text"))
-                .otherwise(FF.concat_ws(" ", "text", FF.concat(FF.lit("rep"), FF.col("r"))))
-                .alias("text"),
-            )
-            .withColumn("epoch", FF.col("doc_id") % 10)
-        )
-        n_docs = docs10.count()
-        streaming.write_epoch_files(docs10, f"{tmp}/cur-docs")
-
-        def run_cur() -> None:
-            curation.stream_curation(
-                spark,
-                f"{tmp}/cur-docs",
-                _fresh(tmp, "cur-accept"),
-                checkpoint=_fresh(tmp, "cur-ckpt"),
-                files_per_trigger=1,
-                redact_pii=True,
-            )
-
-        wall_cur = lane("curation", run_cur)
-
-        # ----- State-bytes retention probe (VERDICT r10 item 2) -----
-        # The r10 lanes showed fully-evicted stores still reporting
-        # ~75% of peak memoryUsedBytes (q8: 296MB of 394MB at
-        # final_rows=2). Hypothesis: the HDFS-backed provider's
-        # loadedMaps version cache — memoryUsedBytes size-estimates ALL
-        # in-memory retained versions (default
-        # spark.sql.streaming.maxBatchesToRetainInMemory=2), so the
-        # N-1th version map, written just BEFORE the final eviction
-        # batch, keeps the peak-sized map alive in the metric. Probe:
-        # re-run the q8 lane with retention=1 (only the current, evicted
-        # version stays resident) and once under RocksDB (whose metric
-        # reports native memtable/block-cache usage, not JVM maps).
-        # Findings + the per-provider healthy bound live in SCALING.md
-        # ("state-bytes retention" note).
-        state_retention: dict[str, dict] = {}
-        state_retention["hdfs_default"] = dict(
-            state_metrics["q8"].get("symmetricHashJoin", {})
-        )
-
-        def _q8_once(tag: str) -> dict:
-            m: dict = {}
-            streaming.run_nexmark_q8_stream(
-                spark,
-                f"{tmp}/p",
-                f"{tmp}/a",
-                checkpoint=_fresh(tmp, f"q8-{tag}"),
-                size_s=10,
-                watermark="600 seconds",
-                files_per_trigger=30,
-                metrics=m,
-            )
-            return m.get("state_operators", {}).get("symmetricHashJoin", {})
-
-        _RETAIN_KEY = "spark.sql.streaming.maxBatchesToRetainInMemory"
-        prev_retain = spark.conf.get(_RETAIN_KEY, None)
-        spark.conf.set(_RETAIN_KEY, "1")
-        try:
-            state_retention["hdfs_retain1"] = _q8_once("retain1")
-        finally:
-            if prev_retain is None:
-                spark.conf.unset(_RETAIN_KEY)
-            else:
-                spark.conf.set(_RETAIN_KEY, prev_retain)
-
-        # ----- RocksDB pass over the six streaming lanes (VERDICT r10
-        # item 8) ----- one measured run each (the lanes are JIT-warm
-        # from the HDFS pass above; RocksDB instance init is part of
-        # what the provider costs, so it stays in the number), fresh
-        # checkpoints (provider choice is baked into checkpoint state).
-        import copy
-
-        hdfs_walls = {
-            "q5_full": wall_q5,
-            "q11_session": wall_q11,
-            "q8_join": wall_q8,
-            "q4_chained": wall_q4,
-            "cdc_apply": wall_cdc,
-            "cdc_mor": wall_mor,
-        }
-        hdfs_state = copy.deepcopy(state_metrics)
-        from squirtle_spark import session as _session
-
-        _SS_KEY = "spark.sql.streaming.stateStore.providerClass"
-        prev_ss = spark.conf.get(_SS_KEY, None)
-        _session.configure_state_store(spark, "rocksdb")
-        rocksdb_lanes: dict[str, dict] = {}
-        try:
-            for lname, fn in (
-                ("q5_full", run_q5),
-                ("q11_session", run_q11),
-                ("q8_join", run_q8),
-                ("q4_chained", run_q4),
-                ("cdc_apply", run_cdc),
-                ("cdc_mor", run_mor),
-            ):
-                w = _timed(fn)
-                base = hdfs_walls[lname]
-                rocksdb_lanes[lname] = {
-                    "wall_sec": round(w, 3),
-                    "hdfs_min_sec": round(base, 3),
-                    "delta_pct": round(100 * (w - base) / base, 1),
-                }
-                print(
-                    f"# rocksdb {lname}: {w:.3f}s (hdfs min {base:.3f}s)",
-                    file=sys.stderr,
-                )
-        finally:
-            if prev_ss is None:
-                spark.conf.unset(_SS_KEY)
-            else:
-                spark.conf.set(_SS_KEY, prev_ss)
-        # the reruns overwrote state_metrics with the RocksDB readings —
-        # keep those as the provider-comparison record, restore the HDFS
-        # readings as the lanes' canonical state_operators
-        rocksdb_state = {
-            k: state_metrics[k] for k in ("q5", "q11", "q8", "q4") if k in state_metrics
-        }
-        state_retention["rocksdb"] = dict(
-            rocksdb_state.get("q8", {}).get("symmetricHashJoin", {})
-        )
-        # Self-adjudicating verdict (r11 finding, SCALING.md "state-bytes
-        # retention"): final/peak ratios + the class a human would assign.
-        # HEALTHY = the retain-1 run collapses the metric (proving the
-        # default's plateau is version-map retention, a bounded 2x of
-        # steady state, not growth); anything else is flagged for a look.
-        for k, v in state_retention.items():
-            if v.get("peak_bytes"):
-                v["final_over_peak"] = round(v["final_bytes"] / v["peak_bytes"], 3)
-        _dflt = state_retention["hdfs_default"].get("final_bytes", 0)
-        _ret1 = state_retention["hdfs_retain1"].get("final_bytes", 0)
-        state_retention["verdict"] = (
-            "version-map-retention (bounded plateau, expected)"
-            if _ret1 and _dflt and _ret1 < 0.5 * _dflt
-            else "unexplained: retain1 did not collapse final_bytes"
-        )
-        state_metrics = hdfs_state
-
-        # IVF-PQ vs plain-PQ crossover at 10x corpus (VERDICT r6 item 4):
-        # at sf0.1 the probe overhead exceeds the pruning win (1.28 s vs
-        # 1.00 s), so the pruning claim rested on structure. Here the
-        # corpus is replicated 10x (deterministic component perturbation,
-        # |delta| <= 0.096 so the IVF packed-argmin bound holds) while
-        # the query set stays N_QUERIES — the ADC scan grows 10x for PQ
-        # but only ~N_PROBE/N_CELLS of that for IVF-PQ, which is where
-        # the FAISS-style composition pays. Recall control: IVF-PQ's
-        # top-k overlap vs plain PQ's isolates what pruning loses.
-        from squirtle_spark import catalog
-        from squirtle_spark.operators import similarity
-        from squirtle_spark.registry import load_all
-
-        qs = load_all()
-
-        def ann_dir(mult: int) -> tuple[str, int]:
-            """{tmp}/sf{mult}x: embeddings replicated mult x with the
-            deterministic component perturbation (|delta| <= 0.096
-            regardless of r, so the IVF packed-argmin bound holds)."""
-            d = f"{tmp}/sf{mult}x"
-            os.makedirs(d, exist_ok=True)
-            for t in catalog.TABLES:
-                if t != "embeddings":
-                    os.symlink(f"{sf_dir}/{t}.parquet", f"{d}/{t}.parquet")
-            base_emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-            n_emb = base_emb.count()
-            (
-                base_emb.withColumn(
-                    "r", FF.explode(FF.sequence(FF.lit(0), FF.lit(mult - 1)))
-                )
-                .selectExpr(
-                    f"r * {n_emb} + vec_id AS vec_id",
-                    "transform(embedding, (x, i) -> CAST(x + "
-                    "((vec_id * 131 + i * 17 + r * 7) % 97 - 48) * 0.002 AS FLOAT)) "
-                    "AS embedding",
-                    "label",
-                )
-                .write.mode("overwrite")
-                .parquet(f"{d}/embeddings.parquet")
-            )
-            return d, n_emb * mult
-
-        def ann_point(
-            d: str, n_cells: int, n_probe: int, label: str
-        ) -> tuple[float, float, float]:
-            """(pq_wall, ivfpq_scaled_wall, recall_vs_pq) at one corpus,
-            min-of-3 (the 10x margin proved run-noisy at min-of-2 — the
-            first/second r8 recordings put the scaled-IVF win at 17% and
-            4% respectively; min-of-3 plus the 30x point below separate
-            structure from host noise)."""
-
-            def run_pq() -> None:
-                qs["ann_pq_topk"].spark_fn(spark, d).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-
-            def run_ivfpq() -> None:
-                similarity.ann_ivfpq_topk_at(
-                    spark, d, n_cells=n_cells, n_probe=n_probe
-                ).write.format("noop").mode("overwrite").save()
-
-            # lane() warm runs pay the index builds (cached per
-            # session+dir+geometry); measured samples hit the cache
-            wall_pq = lane(f"ann_pq_{label}", run_pq, n=3)
-            wall_ivf = lane(f"ann_ivfpq_scaled_{label}", run_ivfpq, n=3)
-            pq_top = qs["ann_pq_topk"].spark_fn(spark, d).select("q_id", "c_id")
-            ivf_top = similarity.ann_ivfpq_topk_at(
-                spark, d, n_cells=n_cells, n_probe=n_probe
-            ).select("q_id", "c_id")
-            overlap = pq_top.join(ivf_top, ["q_id", "c_id"]).count()
-            return wall_pq, wall_ivf, overlap / max(pq_top.count(), 1)
-
-        # 10x point (round-7 comparable): cells ~ sqrt(20k) -> 128,
-        # probe 32 -> ~25% scan fraction (the registered entry's 16/8
-        # defaults scan 50%, sized for the 2k-row oracle fixture).
-        dir10, n_emb10 = ann_dir(10)
-
-        def run_ivfpq10_default() -> None:
-            qs["ann_ivfpq_topk"].spark_fn(spark, dir10).write.format("noop").mode(
-                "overwrite"
-            ).save()
-
-        wall_ivfpq10 = lane("ann_ivfpq_10x", run_ivfpq10_default, n=3)
-        wall_pq10, wall_ivfpq10s, recall_vs_pq = ann_point(dir10, 128, 32, "10x")
-
-        # 30x point: at 60k vectors the full ADC scan is 3x the 10x one
-        # while the probed fraction stays ~25% (256 cells / 64 probed) —
-        # the pruning win becomes structural, beyond host-noise reach.
-        dir30, n_emb30 = ann_dir(30)
-        wall_pq30, wall_ivfpq30s, recall30 = ann_point(dir30, 256, 64, "30x")
-
-        record = {
-            "metric": "stress_events_per_sec",
-            "value": round(n / wall_q5, 1),
-            "unit": "events/sec",
-            "events": n,
-            "rate_multiplier": events_per_sec // 1000,
-            "q5_full_wall_sec": round(wall_q5, 3),
-            "q5_full_events_per_sec": round(n / wall_q5, 1),
-            "q11_session_wall_sec": round(wall_q11, 3),
-            "q11_session_events_per_sec": round(n / wall_q11, 1),
-            "q8_events": n_q8,
-            "q8_join_wall_sec": round(wall_q8, 3),
-            "q8_join_events_per_sec": round(n_q8 / wall_q8, 1),
-            "q4_events": n_q4,
-            "q4_chained_wall_sec": round(wall_q4, 3),
-            "q4_chained_events_per_sec": round(n_q4 / wall_q4, 1),
-            "cdc_changes": n,
-            "cdc_apply_wall_sec": round(wall_cdc, 3),
-            "cdc_apply_changes_per_sec": round(n / wall_cdc, 1),
-            "cdc_mor_wall_sec": round(wall_mor, 3),
-            "cdc_mor_changes_per_sec": round(n / wall_mor, 1),
-            "curation_docs": n_docs,
-            "curation_wall_sec": round(wall_cur, 3),
-            "curation_docs_per_sec": round(n_docs / wall_cur, 1),
-            "ann_corpus_10x_rows": n_emb10,
-            "ann_pq_10x_wall_sec": round(wall_pq10, 3),
-            "ann_ivfpq_10x_wall_sec": round(wall_ivfpq10, 3),
-            "ann_ivfpq_scaled_10x_wall_sec": round(wall_ivfpq10s, 3),
-            "ann_ivfpq_scaled_cells_probe": [128, 32],
-            "ann_ivfpq_scaled_recall_vs_pq": round(recall_vs_pq, 4),
-            "ann_corpus_30x_rows": n_emb30,
-            "ann_pq_30x_wall_sec": round(wall_pq30, 3),
-            "ann_ivfpq_scaled_30x_wall_sec": round(wall_ivfpq30s, 3),
-            "ann_ivfpq_30x_cells_probe": [256, 64],
-            "ann_ivfpq_30x_recall_vs_pq": round(recall30, 4),
-            # ann_ivfpq_auto resolves geometry from the corpus count
-            # (similarity.auto_ivf_geometry, VERDICT r14 #3); at both
-            # stress corpora it lands on the hand-tuned geometry
-            # EXACTLY, so the scaled walls/recalls above ARE the auto
-            # entry's numbers — recorded so the equivalence is an
-            # artifact-checkable fact, not a docstring claim.
-            "ann_ivfpq_auto_geometry_10x": list(
-                similarity.auto_ivf_geometry(n_emb10 - similarity.N_QUERIES)
-            ),
-            "ann_ivfpq_auto_geometry_30x": list(
-                similarity.auto_ivf_geometry(n_emb30 - similarity.N_QUERIES)
-            ),
-            "ann_ivfpq_auto_matches_hand_tuned": (
-                similarity.auto_ivf_geometry(n_emb10 - similarity.N_QUERIES)
-                == (128, 32)
-                and similarity.auto_ivf_geometry(
-                    n_emb30 - similarity.N_QUERIES
-                )
-                == (256, 64)
-            ),
-            "lane_samples": lane_stats,
-            "canary": canary.stats(0),
-            "state_operators": state_metrics,
-            "state_retention": state_retention,
-            "rocksdb_lanes": rocksdb_lanes,
-            "rocksdb_state_operators": rocksdb_state,
-        }
-        prev_round, prev = _stress_prev()
-        record["drift"] = _classify_stress_drift(prev_round, prev, lane_stats)
-        return record
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":

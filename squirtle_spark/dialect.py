@@ -268,8 +268,11 @@ def split_tokens(s: str, d: str) -> str:
 
 
 def array_len(arr: str, d: str) -> str:
+    """Array length, NULL for a NULL array in both dialects. Spark's
+    ``size(NULL)`` is -1 whenever ``spark.sql.ansi.enabled`` is false, so
+    every Spark-side length uses ``array_size``."""
     if d == SPARK:
-        return f"CAST(size({arr}) AS BIGINT)"
+        return f"CAST(array_size({arr}) AS BIGINT)"
     return f"CAST(len({arr}) AS BIGINT)"
 
 
@@ -317,7 +320,7 @@ def levenshtein_codepoints(a: str, b: str, d: str) -> str:
     """
     cap = LEVENSHTEIN_ALPHABET_CAP
     if d == SPARK:
-        alpha_n = f"size(array_distinct(split({a} || {b}, '')))"
+        alpha_n = f"array_size(array_distinct(split({a} || {b}, '')))"
         return (
             f"CASE WHEN {a} IS NULL OR {b} IS NULL THEN CAST(NULL AS INT) "
             f"WHEN length({a}) = 0 OR length({b}) = 0 "
@@ -347,8 +350,8 @@ def word_shingles(toks: str, w: int, d: str) -> str:
     """Array of word w-gram strings from a token array (empty when < w)."""
     if d == SPARK:
         return (
-            f"CASE WHEN size({toks}) >= {w} THEN "
-            f"transform(sequence(1, size({toks}) - {w - 1}), "
+            f"CASE WHEN array_size({toks}) >= {w} THEN "
+            f"transform(sequence(1, array_size({toks}) - {w - 1}), "
             f"i -> concat_ws(' ', slice({toks}, i, {w}))) "
             f"ELSE array() END"
         )
@@ -371,8 +374,8 @@ def pos_shingle_fanout(w: int, d: str) -> tuple[str, str]:
     """
     if d == SPARK:
         return (
-            f"LATERAL VIEW explode(CASE WHEN size(tk) >= {w} "
-            f"THEN sequence(1, size(tk) - {w - 1}) ELSE array() END) g AS pos",
+            f"LATERAL VIEW explode(CASE WHEN array_size(tk) >= {w} "
+            f"THEN sequence(1, array_size(tk) - {w - 1}) ELSE array() END) g AS pos",
             f"concat_ws(' ', slice(tk, pos, {w}))",
         )
     return (

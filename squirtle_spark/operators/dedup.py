@@ -1164,8 +1164,8 @@ def _span_removal_core(
     Reassembly, Spark side (r16; guide §2.3 — shuffle fewer bytes): the
     removed positions aggregate into ONE small per-doc array
     (removed_agg) and each surviving document rebuilds per-row from its
-    own token array (array_except over the position sequence keeps
-    ascending order; element_at re-reads the ORIGINAL-case token) — the
+    own token array (filter over the position sequence keeps ascending
+    order by definition; element_at re-reads the ORIGINAL-case token) — the
     pre-r16 form exploded EVERY corpus token into a row, anti-joined
     the explosion against removed, and re-shuffled all tokens as
     (pos, tok) structs through a doc-keyed collect_list + array_sort.
@@ -1211,7 +1211,7 @@ def _span_removal_core(
         # NULL), n_removed = n_tokens - n_kept stays NULL, and the CASE
         # (0 = NULL is not TRUE) falls through to the rebuild branch,
         # which concat_ws-collapses its NULL array to '' — never NULL.
-        n_kept = f"COALESCE({al} - COALESCE(CAST(size(r.rpos) AS BIGINT), 0), 0)"
+        n_kept = f"COALESCE({al} - COALESCE(CAST(array_size(r.rpos) AS BIGINT), 0), 0)"
         return f"""{removed},
 tk_f AS (
     SELECT * FROM tk WHERE {doc_filter}
@@ -1230,7 +1230,8 @@ SELECT t.doc_id,
        CASE WHEN {n_kept} = {al}
             THEN t.text_orig
             ELSE concat_ws(' ', transform(
-                array_except(sequence(1, size(t.tk)), r.rpos),
+                filter(sequence(1, array_size(t.tk)),
+                       p -> NOT array_contains(r.rpos, p)),
                 p -> element_at(t.tko, p)))
        END AS text_clean
 FROM tk_f t

@@ -48,8 +48,8 @@ def _pair_fanout(d: str) -> tuple[str, str, str]:
     rows with < 2 tokens fan out to nothing)."""
     if d == dl.SPARK:
         return (
-            "LATERAL VIEW explode(CASE WHEN size(tk) >= 2 "
-            "THEN sequence(1, size(tk) - 1) ELSE array() END) g AS pos",
+            "LATERAL VIEW explode(CASE WHEN array_size(tk) >= 2 "
+            "THEN sequence(1, array_size(tk) - 1) ELSE array() END) g AS pos",
             "element_at(tk, pos)",
             "element_at(tk, pos + 1)",
         )

@@ -221,7 +221,7 @@ def _embedding_profile(d: str) -> str:
     """
     if d == dl.SPARK:
         v = "CAST(embedding AS ARRAY<DOUBLE>)"
-        dim = "size(v)"
+        dim = "array_size(v)"
         dot = "aggregate(v, 0D, (acc, x) -> acc + x * x)"
     else:
         v = "CAST(embedding AS DOUBLE[])"

@@ -564,8 +564,8 @@ def _bigram_fanout(d: str) -> tuple[str, str, str]:
     explode — shared by every bigram-model entry."""
     if d == dl.SPARK:
         fanout = (
-            "LATERAL VIEW explode(CASE WHEN size(tk) >= 2 "
-            "THEN sequence(1, size(tk) - 1) ELSE array() END) g AS pos"
+            "LATERAL VIEW explode(CASE WHEN array_size(tk) >= 2 "
+            "THEN sequence(1, array_size(tk) - 1) ELSE array() END) g AS pos"
         )
         return fanout, "element_at(tk, pos)", "element_at(tk, pos + 1)"
     fanout = (
@@ -1161,11 +1161,10 @@ def bpe_train_merges_at(spark, sf_dir, k: int = BPE_TRAIN_K, form: str = "auto")
             break
         w = best.first()  # 1 row: the winning pair as a literal, no broadcast
         pat, rep = f" {w['pair']} ", f" {w['merged']} "
+        # the pair is data: bound as literals, never spliced into SQL text
+        merge = F.replace(F.col("s"), F.lit(pat), F.lit(rep))
         cur = cur.select(
-            F.expr(
-                f"replace(replace(s, '{pat}', '{rep}'), '{pat}', '{rep}')"
-            ).alias("s"),
-            "wn",
+            F.replace(merge, F.lit(pat), F.lit(rep)).alias("s"), "wn"
         ).localCheckpoint(eager=True)
     out = bests[0]
     for b in bests[1:]:

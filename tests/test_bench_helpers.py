@@ -88,32 +88,25 @@ def test_round_number_is_stable_across_same_round_reruns():
 
 
 def test_prev_record_prefers_detail_and_carries_fingerprints():
-    rnd, times, fps, aux, watch, fp_ver = bench._prev_record(sf=0.1)
-    # a comparable record reports its fingerprint version (a
-    # dual-recorded older version or current)
-    assert fp_ver in (0, 2, 3, bench.FINGERPRINT_VERSION)
-    assert rnd >= 6  # r6 is the oldest parseable full record in the repo
-    # never a FUTURE round; its own round is legitimate after this
-    # round's first record lands (intra-round re-record drift, as r12's
-    # idle-host re-record flow used)
-    assert rnd <= bench._round_number()
-    assert times  # some per-query seconds
-    # once a BENCH_DETAIL exists (written this round), fingerprints ride
-    # along; before that the BENCH_r fallback has none — either way the
-    # shapes line up
-    assert all(isinstance(v, (int, float)) for v in times.values())
-    assert all(isinstance(v, str) for v in fps.values())
-    assert all(isinstance(v, str) for v in aux.values())
-    # the watchlist carries only regressed-* classes from the prior
-    # round's drift section (VERDICT r10 item 1)
-    assert all(str(c).startswith("regressed") for c in watch.values())
+    """The drift baseline is the newest same-sf BENCH_DETAIL of an
+    earlier round, read whole: query walls, v4 plan fingerprints, the
+    streaming section and the drift rows all come from this one record."""
+    rnd, rec = bench._prev_record(sf=0.1)
+    assert rnd >= 16  # r16 is the oldest record on the current fingerprint
+    # never a FUTURE round and never the current round's own record
+    assert rnd < bench._round_number()
+    assert rec["sf"] == 0.1
+    assert rec["fingerprint_version"] == bench.FINGERPRINT_VERSION
+    assert rec["queries"] and rec["streaming"]
+    assert all(isinstance(v, (int, float)) for v in rec["queries"].values())
+    assert all(isinstance(v, str) for v in rec["plan_fingerprints"].values())
+    assert all(isinstance(v, str) for v in rec["index_fingerprints"].values())
 
 
 def test_prev_record_skips_other_scale_factors():
     # an sf nobody ever benched at: no record may match — a stray
     # local run at another sf must never poison drift attribution
-    rnd, times, fps, aux, watch, fp_ver = bench._prev_record(sf=123.456)
-    assert (rnd, times, fps, aux, watch, fp_ver) == (0, {}, {}, {}, {}, 0)
+    assert bench._prev_record(sf=123.456) == (0, {})
 
 
 def test_rounds_glob_skips_nonnumeric_names(tmp_path, monkeypatch):
@@ -127,53 +120,29 @@ def test_rounds_glob_skips_nonnumeric_names(tmp_path, monkeypatch):
     assert got == [(3, str(tmp_path / "BENCH_r03.json"))]
 
 
-def test_plan_fingerprint_v3_stable_under_session_aging(spark, sf_dir):
+def test_plan_fingerprint_stable_under_session_aging(spark, sf_dir):
     """Multi-COUNT(DISTINCT) plans render with permuted Expand gid slots
-    as session state moves (r11: dq_profile/interval_overlap_join showed
-    v2 'plan-changes' that were pure permutations of the identical
-    plan). The gid canonicalization (v3-legacy and v4) must hash those
-    renders identically; for gid-free plans v4 == the v2 text hash BY
-    CONSTRUCTION — the load-bearing invariant the fp_gid_artifact
-    gating depends on (ADVICE r11: v3 broke it by dropping the plan's
-    trailing newline, so v3 != v2 for every plan and the gate was
-    vacuously true; this assertion would have caught it)."""
+    as session state moves; the gid canonicalization must hash those
+    renders identically, and a gid-free plan must hash identically too."""
     from squirtle_spark.registry import load_all
 
     qs = load_all()
-    before = {
-        n: bench._plan_fingerprint(qs[n].spark_fn(spark, sf_dir))
-        for n in ("dq_profile", "interval_overlap_join", "tpch_q6")
-    }
+    names = ("dq_profile", "interval_overlap_join", "tpch_q6")
+    before = {n: bench._plan_fingerprint(qs[n].spark_fn(spark, sf_dir)) for n in names}
     # age the session: plan+run a few unrelated queries
     for other in ("tfidf_top_terms", "bm25_topk", "agg_event_stats"):
         qs[other].spark_fn(spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
-    after = {
-        n: bench._plan_fingerprint(qs[n].spark_fn(spark, sf_dir))
-        for n in ("dq_profile", "interval_overlap_join", "tpch_q6")
-    }
-    for n in before:
-        assert before[n]["v3"] == after[n]["v3"], n
-        assert before[n]["v4"] == after[n]["v4"], n
-    # a gid-free plan is untouched by the gid pass: v4 must equal the
-    # v2 text hash byte-for-byte (trailing newline preserved), v2 must
-    # stay stable, and has_gid must say the pass didn't touch it
-    assert before["tpch_q6"]["v2"] == after["tpch_q6"]["v2"]
-    assert before["tpch_q6"]["v4"] == before["tpch_q6"]["v2"]
-    assert not before["tpch_q6"]["has_gid"]
-    # the gid-bearing plans ARE touched: v4 != v2 there, and has_gid
-    # records it (the artifact gate keys on this boolean, not on hash
-    # inequality, which the newline bug proved too blunt)
-    assert before["dq_profile"]["has_gid"]
-    assert before["interval_overlap_join"]["has_gid"]
+    after = {n: bench._plan_fingerprint(qs[n].spark_fn(spark, sf_dir)) for n in names}
+    assert before == after
+    assert all(len(fp) == 12 for fp in before.values())
 
 
 def test_stress_classifier_noise_floor_comes_from_canary():
-    """VERDICT r11 #6: with a canary window recorded, the noise
-    adjudication must key on the canary's relative spread (host
-    evidence), not the lane's own 2-3-sample min/max; without one
-    (pre-r12 artifacts) the legacy spread rule still applies."""
+    """With a canary window recorded, the noise adjudication must key on
+    the canary's relative spread (host evidence), not the lane's own
+    2-3-sample min/max; without one the sample-spread rule applies."""
     prev = {"x_wall_sec": 10.0}
 
     def stats(mn, mx, canary_spread=None):
@@ -189,9 +158,7 @@ def test_stress_classifier_noise_floor_comes_from_canary():
         return s
 
     # delta -30%; canary window spread 16% -> floor 32% >= 30% -> noise
-    d = bench._classify_stress_drift(
-        11, prev, {"x": stats(7.0, 7.2, canary_spread=0.16)}, changed={}
-    )
+    d = bench._lane_drift(11, prev, {"x": stats(7.0, 7.2, canary_spread=0.16)})
     row = d["beyond_tolerance"]["x"]
     assert row["class"] == "noise" and "canary noise floor" in row["evidence"]
     assert row["canary_noise_floor_pct"] == 32.0
@@ -199,15 +166,13 @@ def test_stress_classifier_noise_floor_comes_from_canary():
     # same delta; canary quiet (2%) -> floor 4% < 30% -> improved, even
     # though the lane's OWN spread (7.0..7.2 vs a hypothetical wide one)
     # no longer gets a say
-    d = bench._classify_stress_drift(
-        11, prev, {"x": stats(7.0, 9.9, canary_spread=0.02)}, changed={}
-    )
+    d = bench._lane_drift(11, prev, {"x": stats(7.0, 9.9, canary_spread=0.02)})
     assert d["beyond_tolerance"]["x"]["class"] == "improved"
 
-    # no canary window recorded (legacy artifact): spread rule applies
-    d = bench._classify_stress_drift(11, prev, {"x": stats(7.0, 9.9)}, changed={})
+    # no canary window recorded: the sample-spread rule applies
+    d = bench._lane_drift(11, prev, {"x": stats(7.0, 9.9)})
     row = d["beyond_tolerance"]["x"]
-    assert row["class"] == "noise" and "legacy rule" in row["evidence"]
+    assert row["class"] == "noise" and "spread rule" in row["evidence"]
 
 
 def test_stress_noise_watch_carries_baseline_and_catches_launder():
@@ -247,32 +212,24 @@ def test_stress_noise_watch_carries_baseline_and_catches_launder():
     # prior round: 10.0 -> 12.5 classed noise. Now 12.4 (within tol of
     # 12.5) on a QUIET canary but still +24% over the 10.0 baseline:
     # the launder is caught.
-    d = bench._classify_stress_drift(
-        12, prev_record(12.5, 25.0), {"x": stats(12.4, 0.02)}, changed={}
-    )
+    d = bench._lane_drift(12, prev_record(12.5, 25.0), {"x": stats(12.4, 0.02)})
     row = d["beyond_tolerance"]["x"]
     assert row["class"] == "regressed-vs-baseline"
     assert row["baseline_wall_sec"] == 10.0 and row["baseline_round"] == 11
 
     # same but the wall reverted to the baseline: debt closed
-    d = bench._classify_stress_drift(
-        12, prev_record(12.5, 25.0), {"x": stats(10.2, 0.02)}, changed={}
-    )
+    d = bench._lane_drift(12, prev_record(12.5, 25.0), {"x": stats(10.2, 0.02)})
     assert d["beyond_tolerance"]["x"]["class"] == "noise-reverted"
 
     # still elevated but THIS window's canary is jittery too (floor 2 x
     # 0.15 = 30% >= the 24% baseline delta, raw floor under the cap): renew
-    d = bench._classify_stress_drift(
-        12, prev_record(12.5, 25.0), {"x": stats(12.4, 0.15)}, changed={}
-    )
+    d = bench._lane_drift(12, prev_record(12.5, 25.0), {"x": stats(12.4, 0.15)})
     assert d["beyond_tolerance"]["x"]["class"] == "noise-sustained"
 
     # ADVICE r13: raw floor BEYOND the cap (2 x 0.5 = 100% > 50%) can
     # certify nothing — not "regressed on a QUIET canary", not noise via
     # the capped floor; the forced row must say so and renew the watch
-    d = bench._classify_stress_drift(
-        12, prev_record(12.5, 25.0), {"x": stats(12.4, 0.5)}, changed={}
-    )
+    d = bench._lane_drift(12, prev_record(12.5, 25.0), {"x": stats(12.4, 0.5)})
     row = d["beyond_tolerance"]["x"]
     assert row["class"] == "unmeasurable"
     assert "QUIET" not in row["evidence"]
@@ -281,72 +238,12 @@ def test_stress_noise_watch_carries_baseline_and_catches_launder():
     # exactly like a noise one (it recorded min-of-N as the new base too)
     prev = prev_record(12.5, 25.0)
     prev["drift"]["beyond_tolerance"]["x"]["class"] = "unmeasurable"
-    d = bench._classify_stress_drift(12, prev, {"x": stats(12.4, 0.02)}, changed={})
+    d = bench._lane_drift(12, prev, {"x": stats(12.4, 0.02)})
     assert d["beyond_tolerance"]["x"]["class"] == "regressed-vs-baseline"
 
     # a prior noise row on an IMPROVEMENT (or small delta) forces nothing
-    d = bench._classify_stress_drift(
-        12, prev_record(10.3, 3.0), {"x": stats(10.2, 0.02)}, changed={}
-    )
+    d = bench._lane_drift(12, prev_record(10.3, 3.0), {"x": stats(10.2, 0.02)})
     assert "x" not in d["beyond_tolerance"]
-
-
-def test_stress_watch_rebases_artifact_baselines():
-    """VERDICT r13 #4: the q5_full/q11_session watch carried r11 baseline
-    walls the r13 interleaved A/B proved unreproducible even by r11 code
-    (fast-window artifact) — a watch that could never close. The watch
-    must adjudicate against the A/B-certified band (STRESS_BASELINE_REBASE)
-    and record that it did."""
-    prev = {
-        "q5_full_wall_sec": 4.652,
-        "drift": {
-            "beyond_tolerance": {
-                "q5_full": {
-                    "class": "noise-sustained",
-                    "delta_pct": 5.4,
-                    "prev_round": 12,
-                    "prev_wall_sec": 4.415,
-                    "baseline_round": 11,
-                    "baseline_wall_sec": 3.489,  # the artifact record
-                    "baseline_delta_pct": 33.3,
-                }
-            }
-        },
-    }
-    stats = {
-        "q5_full": {
-            "n_samples": 3,
-            "samples_sec": [4.6, 4.62, 4.65],
-            "min_sec": 4.6,
-            "max_sec": 4.65,
-            "dirty": False,
-            "canary_rel_spread": 0.02,
-        }
-    }
-    d = bench._classify_stress_drift(13, prev, stats, changed={})
-    row = d["beyond_tolerance"]["q5_full"]
-    # vs the rebased 4.05s band, 4.6 is +13.6% — inside tolerance: the
-    # watch finally closes instead of renewing against the dead 3.489
-    assert row["baseline_round"] == 13
-    assert row["baseline_wall_sec"] == 4.05
-    assert row["class"] == "noise-reverted"
-    assert "AB_ADJUDICATION_r13" in row["baseline_rebased"]
-
-    # a lane NOT in the rebase map keeps its carried baseline
-    prev2 = {
-        "other_wall_sec": 4.652,
-        "drift": {
-            "beyond_tolerance": {
-                "other": dict(
-                    prev["drift"]["beyond_tolerance"]["q5_full"]
-                )
-            }
-        },
-    }
-    stats2 = {"other": dict(stats["q5_full"])}
-    d2 = bench._classify_stress_drift(13, prev2, stats2, changed={})
-    row2 = d2["beyond_tolerance"]["other"]
-    assert row2["baseline_round"] == 11 and "baseline_rebased" not in row2
 
 
 def test_host_load_stamp_reads_proc_loadavg():
@@ -449,14 +346,13 @@ def test_round_flag_rejects_missing_or_bad_value(monkeypatch):
 def test_canary_p50_ratio_reads_prior_record_and_handles_missing(
     tmp_path, monkeypatch
 ):
-    """The r15 throughput-floor stamp: ratio of this run's canary p50 to
-    the drift baseline record's, using _prev_record's selection rule
-    (newest same-sf, earlier-round BENCH_DETAIL). A degraded host reads
-    well above 1.0 even when loadavg says settled — the class the r15
-    closing record exhibited (p50 0.084 vs 0.063-0.071).
+    """The throughput-floor stamp: ratio of this run's canary p50 to the
+    drift baseline record's (the one _prev_record selects: newest
+    same-sf, earlier-round BENCH_DETAIL). A degraded host reads well
+    above 1.0 even when loadavg says settled.
 
-    Hermetic (ADVICE r15): a synthetic prior-round record in a tmp dir
-    via a monkeypatched _rounds_glob, so pruning historical artifacts or
+    Hermetic: a synthetic prior-round record in a tmp dir via a
+    monkeypatched _rounds_glob, so pruning historical artifacts or
     running pytest from another cwd can't break the test."""
     import json
 
@@ -480,10 +376,85 @@ def test_canary_p50_ratio_reads_prior_record_and_handles_missing(
     monkeypatch.setattr(bench, "_rounds_glob", fake_glob)
     monkeypatch.setattr(bench, "_round_number", lambda: 8)
     # ratio is literally p50 / prior-record p50 (own-round record ignored)
-    assert bench._canary_p50_ratio(_FakeCanary(0.084), sf=0.1) == round(
+    prev = bench._prev_record(0.1)[1]
+    assert bench._canary_p50_ratio(_FakeCanary(0.084), prev) == round(
         0.084 / 0.07, 3
     )
     # no prior record at a never-benched sf -> None, not a crash
-    assert bench._canary_p50_ratio(_FakeCanary(0.084), sf=123.456) is None
+    missing = bench._prev_record(123.456)[1]
+    assert bench._canary_p50_ratio(_FakeCanary(0.084), missing) is None
     # a canary with no samples (p50 absent/zero) -> None
-    assert bench._canary_p50_ratio(_FakeCanary(0.0), sf=0.1) is None
+    assert bench._canary_p50_ratio(_FakeCanary(0.0), prev) is None
+
+
+def test_query_rows_share_the_one_classifier():
+    """Query rows pass plan/index evidence to the same classifier the
+    lanes use, and the same watch rule forces rows: a query the prior
+    record left regressed-* is re-judged against its pre-regression wall
+    even when this run is inside tolerance of the prior one."""
+    clean = {"min_sec": 1.5, "max_sec": 1.5, "samples_sec": [1.5, 1.6], "dirty": False}
+    c = bench._classify_drift
+    assert c(1.0, clean, same_plan=False)["class"] == "plan-change"
+    assert c(1.0, clean, same_plan=True)["class"] == "regressed-same-plan"
+    assert c(1.0, clean, same_plan=True, same_index=True)["class"] == "environment"
+    assert c(1.0, clean, same_plan=True, same_index=False)["class"] == (
+        "regressed-same-plan"
+    )
+    assert c(1.0, clean)["class"] == "regressed"
+    assert c(2.0, clean, same_plan=True)["class"] == "improved"
+    assert c(1.0, {**clean, "dirty": True}, same_plan=True)["class"] == "noise"
+    # a retime that came back within tolerance: noise
+    back = {**clean, "min_sec": 1.1, "max_sec": 1.6}
+    assert c(1.0, back, same_plan=True)["class"] == "noise"
+
+    prior = {"class": "regressed-same-plan", "prev_round": 16, "prev_sec": 1.0,
+             "delta_pct": 50.0}
+    watch = bench._watch(prior)
+    assert watch == {"class": "regressed-same-plan", "round": 16, "wall_sec": 1.0}
+    still = {**clean, "min_sec": 1.45}  # within tolerance of a 1.5 prior
+    row = c(1.5, still, same_plan=True, watch=watch)
+    assert row["class"] == "regressed-vs-baseline" and row["baseline_wall_sec"] == 1.0
+    fixed = {**clean, "min_sec": 1.05}
+    assert c(1.2, fixed, same_plan=True, watch=watch)["class"] == "noise-reverted"
+    # improved / plan-change / noise-reverted rows arm no watch
+    for cls in ("improved", "plan-change", "noise-reverted"):
+        assert bench._watch({**prior, "class": cls}) is None
+
+
+def test_stdout_payload_key_set():
+    """Callers parse this line: its keys (and nested canary,
+    streaming and drift keys) are a contract. Built without Spark."""
+    stamps = {"a": {"dirty": False}, "b": {"dirty": True}}
+    streaming = {k: 1.0 for k in bench.STDOUT_STREAMING_KEYS}
+    streaming["lane_samples"] = {}
+    drift = {
+        "a": {"class": "noise-sustained"},
+        "b": {"class": "regressed-same-plan"},
+    }
+    canary = {"effective_calibration_sec": 0.07, "max_sec": 0.2, "reruns": 1}
+    p = bench._stdout_payload(
+        0.1, {"a": 1.0, "b": 2.0}, stamps, canary, streaming, drift, True,
+        "BENCH_DETAIL_r18.json",
+    )
+    assert set(p) == {
+        "metric", "value", "unit", "queries", "sf", "canary", "streaming",
+        "drift", "host_settled", "detail",
+    }
+    assert set(p["canary"]) == {"cal_sec", "max_sec", "reruns", "dirty_queries"}
+    assert set(p["streaming"]) == {
+        "q5_events_per_sec",
+        "q5_full_query_events_per_sec",
+        "q5_microbatch_latency_p50_sec",
+        "q5_microbatch_latency_p95_sec",
+        "q11_full_query_events_per_sec",
+        "q8_full_query_events_per_sec",
+        "ysb_events_per_sec",
+        "q4_full_query_events_per_sec",
+    }
+    assert p["drift"] == {
+        "checked": 2, "noise": 1, "plan_change": 0, "improved": 0,
+        "environment": 0, "other": ["b"],
+    }
+    assert (p["metric"], p["value"], p["unit"]) == ("headline_total_sec", 3.0, "sec")
+    assert p["canary"]["dirty_queries"] == 1
+    assert json.loads(bench._compact_line(p)) == p

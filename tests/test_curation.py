@@ -362,6 +362,38 @@ def test_bpe_stepped_form_matches_unrolled_across_threshold(spark, sf_dir):
     )
 
 
+def test_bpe_stepped_form_binds_quote_and_backslash_symbols(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The stepped form applies each round's winning pair to the corpus.
+    A corpus whose symbols include ' and \\ must train the same merges
+    in the stepped and unrolled forms: the pair is data, never SQL."""
+    import os
+
+    from squirtle_spark.operators import text
+
+    # a private sf_dir so the planted corpus gets its own session matview
+    planted_dir = tmp_path / "sf"
+    planted_dir.mkdir()
+    for t in catalog.TABLES:
+        os.symlink(f"{sf_dir}/{t}.parquet", planted_dir / f"{t}.parquet")
+    q, bs = "chr(39)", "chr(92)"
+    corpus = (
+        f"SELECT concat(' a ', {q}, ' b ', {bs}, ' ') AS s, CAST(10 AS BIGINT) AS wn "
+        f"UNION ALL SELECT concat(' ', {q}, ' ', {bs}, ' ', {q}, ' ', {bs}, ' '), "
+        "CAST(7 AS BIGINT) "
+        f"UNION ALL SELECT concat(' ', {bs}, ' ', {bs}, ' a '), CAST(3 AS BIGINT)"
+    )
+    monkeypatch.setattr(text, "_bpe_words0", lambda d: corpus)
+    k = 4
+    u = [tuple(r) for r in text.bpe_train_merges_at(
+        spark, str(planted_dir), k=k, form="unrolled").collect()]
+    s = [tuple(r) for r in text.bpe_train_merges_at(
+        spark, str(planted_dir), k=k, form="stepped").collect()]
+    assert u == s and len(u) == k
+    assert any("'" in r[1] or "\\" in r[1] for r in u)
+
+
 def test_stream_curation_redacts_pii(spark, tmp_path):
     """With redact_pii on, accepted rows store masked text while dedup
     still keys on raw content: two docs identical except for their PII
@@ -599,6 +631,29 @@ def test_span_removal_preserves_case_and_canonical_content(spark):
     # (3) uppercase occurrence matches case-insensitively; kept remainder
     # reassembles with its original mixed case
     assert got[5]["text_clean"] == "x Y z w v" and got[5]["n_removed"] == 5
+
+
+def test_span_removal_keeps_survivors_in_order(spark):
+    """A document whose removed positions are NOT contiguous (two
+    duplicated spans with a survivor between and around them) must
+    reassemble its surviving tokens in their original order."""
+    from squirtle_spark.operators import dedup
+
+    _plant_documents(
+        spark,
+        [
+            (1, "a b c d e", "en"),
+            (2, "f g h i j", "en"),
+            (3, "p a b c d e q f g h i j r", "en"),
+        ],
+    )
+    got = {
+        r["doc_id"]: r
+        for r in spark.sql(dedup._dedup_span_removal(dl.SPARK)).collect()
+    }
+    assert got[3]["text_clean"] == "p q r"
+    assert (got[3]["n_kept"], got[3]["n_removed"]) == (3, 10)
+    assert got[1]["text_clean"] == "a b c d e" and got[2]["n_removed"] == 0
 
 
 def test_span_index_probe_matches_registered_entry(spark, sf_dir, tmp_path):

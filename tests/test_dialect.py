@@ -325,7 +325,7 @@ def test_gsum_gavg_duck_branch_byte_identical_to_dsum_davg():
     the r15 dsum->gsum call-site swaps (e.g. windows.py oracle bodies)
     are provably no-ops on the oracle side only while this holds — the
     r16 adjudication of the win_session/win_tumbling drift rows cites
-    this invariant (bench._ADJUDICATIONS 'r15 closing-record')."""
+    this invariant (BENCH_DETAIL_r16.json 'adjudications')."""
     for x in ("value", "l_extendedprice * (1 - l_discount)"):
         assert dl.gsum(x, dl.DUCK) == dl.dsum(x, dl.DUCK)
         assert dl.gavg(x, dl.DUCK) == dl.davg(x, dl.DUCK)

@@ -184,3 +184,27 @@ def test_degenerate_fixture_full_sweep(spark, tmp_path_factory):
     assert not bad, "degenerate-fixture failures:\n" + "\n".join(
         f"  {k}: {v['status']} {v['msg']}" for k, v in bad.items()
     )
+
+
+@pytest.mark.differential
+def test_null_array_lengths_do_not_depend_on_ansi(spark, tmp_path):
+    """With spark.sql.ansi.enabled=false, Spark's ``size(NULL)`` is -1
+    where ``array_size(NULL)`` and DuckDB's ``len(NULL)`` are NULL. The
+    NULL-text docs of the degenerate fixture must give oracle-equal
+    token counts and span removals under either setting."""
+    from squirtle_spark import catalog
+    from squirtle_spark.oracle import check_query
+    from tools.randgen import generate_degenerate
+
+    d = generate_degenerate(str(tmp_path / "degen"))
+    key = "spark.sql.ansi.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    catalog.invalidate(spark)
+    try:
+        for name in ("token_count", "dedup_span_removal"):
+            res = check_query(spark, name, d)
+            assert res.ok, res.message()
+    finally:
+        spark.conf.set(key, prev)
+        catalog.invalidate(spark)

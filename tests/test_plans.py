@@ -98,16 +98,16 @@ def test_q21_single_lineitem_scan(spark, sf_dir):
 
 def test_span_removal_reassembles_without_token_explosion(spark, sf_dir):
     """r16 rewrite: reassembly decides with the per-doc removed-position
-    ARRAY and rebuilds text per-row (array_except over the position
-    sequence) — the pre-r16 form exploded every corpus token into a row
-    and re-shuffled all of them as (pos, tok) structs through a
-    doc-keyed collect_list + array_sort. Both registered forms (batch
-    window-pair and incremental join-pair) share the tail."""
+    ARRAY and rebuilds text per-row (the position sequence filtered by
+    membership in that array) — the pre-r16 form exploded every corpus
+    token into a row and re-shuffled all of them as (pos, tok) structs
+    through a doc-keyed collect_list + array_sort. Both registered forms
+    (batch window-pair and incremental join-pair) share the tail."""
     for name in ["dedup_span_removal", "dedup_span_removal_incremental"]:
         plan = _executed_plan(load_all()[name].spark_fn(spark, sf_dir))
         assert "collect_list(struct(pos" not in plan, name
         assert "collect_list(tpos" in plan, name
-        assert "array_except" in plan, name
+        assert "NOT array_contains(rpos" in plan, name
 
 
 def test_span_family_skips_shingle_exchange(spark, sf_dir):

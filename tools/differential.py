@@ -51,9 +51,10 @@ EXCLUSIONS: dict[str, str] = {
 }
 
 
-def run_seed(spark, seed: int, base_dir: str) -> dict[str, dict]:
-    """Generate the seed's fixture under base_dir and replay every
-    non-excluded oracle-backed entry; returns name -> result row."""
+def _sweep(spark, fixture_dir: str) -> dict[str, dict]:
+    """Replay every non-excluded oracle-backed entry against its DuckDB
+    oracle on the fixture at ``fixture_dir``; returns name -> result
+    row. A crash is recorded as a finding, never an abort."""
     import os
     import sys
 
@@ -61,70 +62,48 @@ def run_seed(spark, seed: int, base_dir: str) -> dict[str, dict]:
     from squirtle_spark.oracle import check_query
     from squirtle_spark.registry import load_all
 
-    from .randgen import generate
-
-    d = generate(os.path.join(base_dir, f"s{seed}"), seed)
     out: dict[str, dict] = {}
     for name, q in sorted(load_all().items()):
         if q.oracle is None or name in EXCLUSIONS:
             continue
         t = time.time()
         try:
-            res = check_query(spark, name, d)
+            res = check_query(spark, name, fixture_dir)
             out[name] = {
                 "status": "ok" if res.ok else "mismatch",
                 "spark_rows": res.rows_spark,
                 "oracle_rows": res.rows_oracle,
                 "msg": None if res.ok else res.message()[:400],
                 "sec": round(time.time() - t, 2),
-            }
-        except Exception as e:  # a crash is a finding, not an abort
-            out[name] = {
-                "status": "error",
-                "msg": f"{type(e).__name__}: {str(e)[:300]}",
-                "sec": round(time.time() - t, 2),
-            }
-    return out
-
-
-def run_degenerate(spark, base_dir: str) -> dict[str, dict]:
-    """Replay every non-excluded oracle-backed entry on the DEGENERATE
-    fixture (tools/randgen.generate_degenerate: empty fact tables,
-    singleton groups, a zero embedding, NULL/empty text). First r12
-    sweep found 12 failures — 9 crashes (single-row-group sample
-    variance, zero-norm cosine, empty IVF centroid sample, zero-char
-    language shares) and 3 engine divergences (Spark PIVOT NULL cells
-    vs FILTER 0, NULL-band mode ties, sparse-vs-dense melt) — all
-    fixed; this lane keeps them fixed."""
-    import os
-    import sys
-    import time as _time
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from squirtle_spark.oracle import check_query
-    from squirtle_spark.registry import load_all
-
-    from .randgen import generate_degenerate
-
-    d = generate_degenerate(os.path.join(base_dir, "degen"))
-    out: dict[str, dict] = {}
-    for name, q in sorted(load_all().items()):
-        if q.oracle is None or name in EXCLUSIONS:
-            continue
-        t = _time.time()
-        try:
-            res = check_query(spark, name, d)
-            out[name] = {
-                "status": "ok" if res.ok else "mismatch",
-                "spark_rows": res.rows_spark,
-                "oracle_rows": res.rows_oracle,
-                "msg": None if res.ok else res.message()[:400],
-                "sec": round(_time.time() - t, 2),
             }
         except Exception as e:
             out[name] = {
                 "status": "error",
                 "msg": f"{type(e).__name__}: {str(e)[:300]}",
-                "sec": round(_time.time() - t, 2),
+                "sec": round(time.time() - t, 2),
             }
     return out
+
+
+def run_seed(spark, seed: int, base_dir: str) -> dict[str, dict]:
+    """Generate the seed's fixture under base_dir and sweep it."""
+    import os
+
+    from .randgen import generate
+
+    return _sweep(spark, generate(os.path.join(base_dir, f"s{seed}"), seed))
+
+
+def run_degenerate(spark, base_dir: str) -> dict[str, dict]:
+    """Sweep the DEGENERATE fixture (tools/randgen.generate_degenerate:
+    empty fact tables, singleton groups, a zero embedding, NULL/empty
+    text). First r12 sweep found 12 failures — 9 crashes (single-row-group
+    sample variance, zero-norm cosine, empty IVF centroid sample,
+    zero-char language shares) and 3 engine divergences (Spark PIVOT NULL
+    cells vs FILTER 0, NULL-band mode ties, sparse-vs-dense melt) — all
+    fixed; this lane keeps them fixed."""
+    import os
+
+    from .randgen import generate_degenerate
+
+    return _sweep(spark, generate_degenerate(os.path.join(base_dir, "degen")))
